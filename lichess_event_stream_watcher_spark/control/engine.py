@@ -320,6 +320,7 @@ class Engine:
 
         # -- side effects + stats, in arrival order -------------------------
         matched.sort(key=lambda r: r["_row_id"])
+        stats_changed = False
         by_event: dict[int, list] = {}
         order: list[int] = []
         for m in matched:
@@ -348,7 +349,10 @@ class Engine:
                 self._dispatch_actions(rule, username, delay_ms_if_needed)
             # stats commit after the event's rule loop (src/eventhandler.rs:276-283)
             for name in fired:
-                self.store.caught(name, username, self.now_fn())
+                stats_changed |= self.store.caught(name, username, self.now_fn())
+        # one rules-file rewrite per micro-batch, not one per match
+        if stats_changed:
+            self.store.save()
 
     def _dispatch_actions(self, rule: Rule, username: str, delay_ms_if_needed: int) -> None:
         """src/eventhandler.rs:147-255."""

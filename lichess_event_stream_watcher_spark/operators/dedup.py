@@ -2463,8 +2463,7 @@ def paragraph_dedup(
             "pos", "para"
         ),
     ).filter(F.col("para").isNotNull() & (F.trim(F.col("para")) != ""))
-    norm = F.regexp_replace(F.trim(F.lower(F.col("para"))), r"\s+", " ")
-    keyed = paras.withColumn("pkey", F.md5(norm))
+    keyed = paras.withColumn("pkey", F.md5(normalize_text(F.col("para"))))
     blocklist = (
         keyed.groupBy("pkey")
         .agg(F.count_distinct("id").alias("pdf"))

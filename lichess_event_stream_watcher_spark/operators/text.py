@@ -28,8 +28,15 @@ LANG_MARKERS: dict[str, list[str]] = {
 
 
 def normalize_text(col: Column) -> Column:
-    """lower + trim + collapse runs of whitespace to single spaces."""
-    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
+    """lower + collapse runs of whitespace to single spaces + trim. The
+    collapse runs first, so tab- or newline-padded copies normalise like
+    space-padded ones (trim strips spaces only)."""
+    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+
+
+def normalize_text_sql(expr: str) -> str:
+    """DuckDB twin of ``normalize_text`` for oracle SQL, in the same order."""
+    return f"trim(regexp_replace(lower({expr}), '\\s+', ' ', 'g'))"
 
 
 def tokens(col: Column) -> Column:

@@ -2,9 +2,8 @@
 
 Every operator from SURVEY.md §2 that is SQL-expressible registers BOTH a
 Spark callable ``(spark, sf_dir) -> DataFrame`` and the equivalent DuckDB SQL
-over the same parquet tables. Non-SQL-expressible ops (CODE predicates,
-custom stateful streaming) register Spark-only (rows-only check) and are
-covered by differential pytest oracles instead.
+over the same parquet tables; every registered query carries an oracle.
+Both registries keep registration order.
 
 Column names are aliased identically on both sides — the driver's compare
 sorts columns by name before hashing values.
@@ -203,240 +202,16 @@ def rule_expiry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The driver's CORRECTNESS harness certifies the FIRST 50 registered
-# queries per round, so registration order IS the verification budget.
-# Round-4 allocation (per VERDICT.md round-3 task #1): the thrice-green
-# core shrinks to its 2 anchor slots (rule_scan = the flagship scan path,
-# crit_code_predicate = the whole UDF/translator runtime), and the other
-# 48 slots go to (a) every query that had NEVER had a driver row in
-# rounds 1-3 — the round-3 additions, the TPC-H tail, the rows-only
-# trained-ANN twins (now hash-oracled via frozen artifacts), and the
-# sampling/packing/layout family — (b) this round's new queries
-# (interval_join_attribution, curation_pipeline_counts), and (c) the five
-# stalest greens (r1-only: dedup_exact, ann_lsh_buckets; plus the three
-# TPC-H r2-only rows VERDICT flagged). Result: after this round every
-# registered query has at least one lifetime driver-green row. Rotated-out
-# queries (all with >= 1 green row, most with 2-3) keep coverage every
-# session through tests/test_oracle_parity.py.
-_DRIVER_PRIORITY = [
-    # ---- the round-11 50-row driver window ------------------------------
-    # Mechanized rotation (tests/test_registry_policy.py): with
-    # CORRECTNESS_r10 committed, the staleness horizon reaches round 6,
-    # so the 47 r6-vintage rows pre-declared by round 10's group (A)
-    # rotate into the window NOW. The other 3 slots go to the queries
-    # whose backing code round 11's optimization work changed most — the
-    # charlm two-Arrow-pass rewrite, the fused curation quality gate,
-    # and semantic_dedup's bounded-block cell scoring — so their r10
-    # greens are re-earned on the changed code:
-    "charlm_quality",
-    "curation_pipeline_counts",
-    "semantic_dedup",
-    "ann_cost_census",
-    "ann_lsh_buckets",
-    "ann_pq_distortion",
-    "ann_recall_eval",
-    "asof_join_orders",
-    "c4_line_stats",
-    "cube_pricing",
-    "date_functions",
-    "dedup_cost_census",
-    "dedup_keep_best_clusters",
-    "dedup_lsh_band_sweep",
-    "dedup_minhash_calibration",
-    "dedup_threshold_sensitivity",
-    "first_event_per_user",
-    "json_extract_props",
-    "leakage_safe_split_counts",
-    "match_stats",
-    "max_order_per_cust_subquery",
-    "notify_dedup_anti",
-    "percentiles_exact",
-    "pivot_event_counts",
-    "rollup_pricing",
-    "scalar_encoding",
-    "scalar_suite",
-    "seen_lookup_semi",
-    "seen_window_counts",
-    "sessionize",
-    "set_ops",
-    "tf_cosine_incremental",
-    "tf_cosine_pairs_sparse",
-    "topk_recent_events",
-    "tpch_q10_returned_items",
-    "tpch_q13_custdist",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q19_bracket_revenue",
-    "tpch_q1_pricing",
-    "tpch_q3_revenue",
-    "tpch_q4_priority",
-    "tpch_q5_region_revenue",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_profit",
-    "unimax_allocation",
-    "unpivot_measures",
-    "window_suite",
-    # ---- position 51+: the declared rotation queue -----------------------
-    # (A) the round-9/10 window, rotated out whole at the round-11
-    # rotation — every row is r10-green (CORRECTNESS_r10: 50/50), valid
-    # through round 14. Round 11's operator work (operators/dedup.py,
-    # text.py, similarity.py, session_cache.py, pipeline.py and the two
-    # queries_pipeline.py explode_outer fixes) preempts many of their
-    # closures; all re-verified green at sf0.01 by this session's full
-    # driver-sim sweep on the changed code, and declared here so the
-    # committed paper trail rotates them through upcoming windows:
-    "semantic_dedup_auto",
-    "image_stats_jpeg",
-    "gopher_rule_failures",
-    "ann_ivf_topk",
-    "ann_ivf_trained",
-    "ann_ivf_trained_q",
-    "ann_ivfpq_topk",
-    "ann_pq_topk",
-    "benford_first_digit",
-    "boilerplate_ngrams",
-    "bpe_encode_pieces",
-    "bpe_source_token_counts",
-    "ccnet_quality_buckets",
-    "collocation_lift_topk",
-    "corpus_snapshot_diff",
-    "corpus_token_accounting",
-    "cusum_hourly_changepoint",
-    "dedup_exact",
-    "distinctive_terms_by_source",
-    "dsir_importance_log",
-    "dup_graph_pagerank",
-    "embedding_pca_projection_q",
-    "embedding_random_projection",
-    "event_transition_matrix",
-    "funnel_conversion",
-    "hard_negative_mining",
-    "histogram_drift_tv",
-    "hourly_corr_pairs",
-    "hybrid_retrieval_rrf",
-    "ingestion_admission_counts",
-    "join_key_profile",
-    "k_anonymity_audit",
-    "label_centroid_confusion",
-    "label_centroid_dispersion",
-    "last3_caught",
-    "ngram_novelty_profile",
-    "ols_trend_by_type",
-    "quality_lr_source_scores",
-    "regex_token_counts",
-    "retrieval_eval",
-    "robust_length_outliers",
-    "rule_scan",
-    "source_label_gini",
-    "source_lang_cramers_v",
-    "source_overlap_matrix",
-    "token_budget_sample",
-    "weighted_priority_sample",
-    "winnowing_dup_pairs",
-    "zipf_octave_profile",
-    "zorder_key_events",
-    # (B) the carried-forward changed-since-green declarations from
-    # rounds 7-10 (see git history for the per-group narratives), minus
-    # the three rows promoted into this round's window head:
-    "action_schedule",
-    "rule_expiry_sweep",
-    "rule_scan_actions",
-    "would_fire_counts",
-    "contamination_check",
-    "curation_gate",
-    "dedup_clusters",
-    "dedup_clusters_star",
-    "dedup_containment",
-    "dedup_incremental",
-    "dedup_jaccard_inverted",
-    "dedup_jaccard_pairs",
-    "dedup_jaccard_prefix",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "fuzzy_graph_kcore",
-    "fuzzy_graph_triangles",
-    "lexicon_coverage",
-    "lsh_bucket_histogram",
-    "multimodal_features",
-    "multimodal_manifest",
-    "paragraph_dedup",
-    "repetition_profile",
-    "source_quality_scorecard",
-    "temperature_mix_sample",
-    "text_profile",
-    "tf_cosine_pairs",
-    "crit_ip_match",
-    "crit_print_match",
-    "crit_email_contains",
-    "crit_email_regex",
-    "crit_username_contains",
-    "crit_username_regex",
-    "crit_useragent_length_lte",
-    "crit_susp_ip_gate",
-    "ann_lsh_topk",
-    "ann_pq_adc",
-    "embedding_near_dup",
-    "embedding_quantize_int8",
-    "ivf_cell_occupancy",
-    "knn_cosine_topk",
-    "image_stats",
-    "resize_image",
-    "multimodal_frames",
-    "ann_ivfpq_adc",
-    "ann_kmeans_cells_q",
-    "ann_lsh_multiprobe",
-    "bloom_admission",
-    "bm25_lucene_topk",
-    "bm25_rsj_topk",
-    "bpe_merge_ranks",
-    "chunk_documents",
-    "cross_source_dups",
-    "dataset_split_counts",
-    "dedup_corpus",
-    "dsir_importance_q",
-    "dup_graph_pagerank_q",
-    "dup_span_profile",
-    "embedding_feature_stats",
-    "embedding_robust_stats",
-    "epoch_shuffle",
-    "pack_sequences_bins",
-    "pii_scrub",
-    "salted_event_type_counts",
-    "source_quota_sample",
-    "substring_dedup",
-    "username_fuzzy_pairs",
-]
-# Queued round-10 NEW registrations (the r6-r9 precedent — implement +
-# pytest-certify mid-round, register at the next window head), each with
-# a staged query + frozen oracle + dress-rehearsal pytest already in
-# place: `image_stats_lossless` (artifacts_png.staged_query — PNG + GIF
-# on one row; lossless, so the oracle derives from recipe rasters with
-# no codec in the chain),
-# `audio_stats_wav` (artifacts_wav.staged_query — integer PCM
-# statistics from integer recipe grids), and `video_frame_stats_avi`
-# (artifacts_avi.staged_query — container walk + sampled-frame JPEG
-# decode, corrupt-middle-frame pill).
-
-
-def _ordered(mapping: dict) -> dict:
-    head = [k for k in _DRIVER_PRIORITY if k in mapping]
-    tail = [k for k in mapping if k not in _DRIVER_PRIORITY]
-    return {k: mapping[k] for k in head + tail}
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Import registers the extended query families on first use.
     from . import queries_analytics  # noqa: F401
     from . import queries_pipeline  # noqa: F401
 
-    return _ordered(QUERIES)
+    return dict(QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
     from . import queries_analytics  # noqa: F401
     from . import queries_pipeline  # noqa: F401
 
-    return _ordered(ORACLES)
+    return dict(ORACLES)

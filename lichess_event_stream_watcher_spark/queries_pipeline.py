@@ -20,8 +20,9 @@ from .queries import query
 # ---------------------------------------------------------------------------
 # shared DuckDB CTE fragments
 # ---------------------------------------------------------------------------
-_NORM = r"""norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+_NORM_TEXT = X.normalize_text_sql("text")
+_NORM = rf"""norm AS (
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 )"""
 _TOKS = r"""toks AS (SELECT id, string_split_regex(t, '\s+') AS tk FROM norm)"""
@@ -102,8 +103,8 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "dedup_exact",
-    r"""WITH norm AS (
-  SELECT doc_id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t FROM documents
+    rf"""WITH norm AS (
+  SELECT doc_id, {_NORM_TEXT} AS t FROM documents
 )
 SELECT md5(t) AS fp, MIN(doc_id) AS keep_id, COUNT(*) AS n_dups
 FROM norm GROUP BY md5(t)""",
@@ -1196,7 +1197,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "paragraph_dedup",
-    r"""WITH docs2 AS (
+    rf"""WITH docs2 AS (
   SELECT doc_id AS id, text || '. all rights reserved footer. contact us at example' AS text
   FROM documents
 ),
@@ -1206,7 +1207,7 @@ paras AS (
 ),
 keyed AS (
   SELECT id, pos, para,
-         md5(regexp_replace(trim(lower(para)), '\s+', ' ', 'g')) AS pkey
+         md5({X.normalize_text_sql("para")}) AS pkey
   FROM paras WHERE trim(para) <> ''
 ),
 block AS (SELECT pkey FROM keyed GROUP BY pkey HAVING COUNT(DISTINCT id) >= 2),
@@ -1921,8 +1922,8 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.quantize_int8(emb)
 
 
-_CHARLM_ORACLE = r"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+_CHARLM_ORACLE = rf"""WITH norm AS (
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 bg AS (
@@ -2398,8 +2399,8 @@ def tf_cosine_pairs_sparse_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CHUNK_ORACLE = r"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+_CHUNK_ORACLE = rf"""WITH norm AS (
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 toks AS (
@@ -2569,16 +2570,20 @@ def embedding_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over survivors, and the chunk-count arithmetic. PII scrubbing changes no
 # counts (redaction placeholders contain no whitespace, so token counts
 # are invariant — asserted in tests/test_pipeline_ops.py).
+# The stage outputs (docs1, docs2, gated, sampled) are MATERIALIZED:
+# DuckDB 1.0 otherwise inlines the whole chain once per reference, which
+# took 29 s and 3.5 GB peak RSS at sf0.01 on a 4-core host, against 1.4 s
+# and 260 MB materialized, with the same rows.
 # ---------------------------------------------------------------------------
-_PIPELINE_COUNTS_ORACLE = r"""WITH RECURSIVE
+_PIPELINE_COUNTS_ORACLE = rf"""WITH RECURSIVE
 norm0 AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 keep1 AS (SELECT MIN(id) AS doc_id FROM norm0 GROUP BY md5(t)),
-docs1 AS (SELECT d.* FROM documents d JOIN keep1 USING (doc_id)),
+docs1 AS MATERIALIZED (SELECT d.* FROM documents d JOIN keep1 USING (doc_id)),
 norm1 AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM docs1
 ),
 toks1 AS (SELECT id, string_split_regex(t, '\s+') AS tk FROM norm1),
@@ -2604,11 +2609,11 @@ reach1(src, node) AS (
   SELECT r.src, e.y FROM reach1 r JOIN edges1 e ON e.x = r.node
 ),
 comp1 AS (SELECT src AS id, MIN(node) AS comp FROM reach1 GROUP BY src),
-docs2 AS (
+docs2 AS MATERIALIZED (
   SELECT d.* FROM docs1 d JOIN comp1 c ON c.id = d.doc_id AND c.comp = d.doc_id
 ),
 norm2 AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM docs2
 ),
 toks2 AS (SELECT id, string_split_regex(t, '\s+') AS tk FROM norm2),
@@ -2677,7 +2682,7 @@ lang2 AS (
          ELSE 'und' END AS lang_pred
   FROM langs2
 ),
-gated AS (
+gated AS MATERIALIZED (
   SELECT d.doc_id, d.lang
   FROM docs2 d
   JOIN lexkeep2 lk ON lk.id = d.doc_id AND lk.keep
@@ -2692,7 +2697,7 @@ rates AS (
          CAST(floor(sqrt(CAST(cmin.c AS DOUBLE) / CAST(n_docs AS DOUBLE)) * 1000000.0) AS BIGINT) AS rate_q
   FROM cnts CROSS JOIN cmin
 ),
-sampled AS (
+sampled AS MATERIALIZED (
   SELECT g.doc_id FROM gated g JOIN rates r ON r.source IS NOT DISTINCT FROM g.lang
   WHERE CAST(('0x' || substring(md5('temp|' || CAST(g.doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
         % 1000000 < r.rate_q
@@ -2737,8 +2742,8 @@ def curation_pipeline_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is kmeans-style driver-looped and pinned against a pure-python twin in
 # pytest.
 # ---------------------------------------------------------------------------
-_BPE_RANKS_ORACLE = r"""WITH norm AS (
-  SELECT regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t FROM documents
+_BPE_RANKS_ORACLE = rf"""WITH norm AS (
+  SELECT {_NORM_TEXT} AS t FROM documents
 ),
 words AS (
   SELECT unnest(string_split_regex(t, '\s+')) AS word FROM norm
@@ -2808,7 +2813,7 @@ _BM25_CONTRIB = (
 # the CTE chain both BM25 oracles share verbatim — everything up through
 # `matched`; each variant appends its own `scored` + `ranked` + projection
 _BM25_CTE_PREFIX = rf"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 tk AS (SELECT id, unnest(string_split_regex(t, '\s+')) AS term FROM norm),
@@ -2911,7 +2916,7 @@ _DSIR_B = 4096
 
 _DSIR_ORACLE = rf"""WITH norm AS (
   SELECT doc_id AS id, lang = 'en' AS is_target,
-         regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+         {_NORM_TEXT} AS t
   FROM documents
 ),
 tk AS (
@@ -2958,7 +2963,7 @@ def dsir_importance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DSIR_LOG_ORACLE = rf"""WITH norm AS (
   SELECT doc_id AS id, lang = 'en' AS is_target,
-         regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+         {_NORM_TEXT} AS t
   FROM documents
 ),
 tk AS (
@@ -3051,8 +3056,8 @@ def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DUP_SPAN_ORACLE = r"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+_DUP_SPAN_ORACLE = rf"""WITH norm AS (
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 base AS (
@@ -3087,8 +3092,8 @@ def dup_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.dup_span_profile(docs, n=8)
 
 
-_SUBSTR_DEDUP_ORACLE = r"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+_SUBSTR_DEDUP_ORACLE = rf"""WITH norm AS (
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 base AS (SELECT id, string_split_regex(t, '\s+') AS tk FROM norm),
@@ -3339,8 +3344,8 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — round-4 late additions (round-5 certification queue; full local parity)
 # ---------------------------------------------------------------------------
 
-_BOILERPLATE_ORACLE = r"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+_BOILERPLATE_ORACLE = rf"""WITH norm AS (
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 base AS (SELECT id, string_split_regex(t, '\s+') AS tk FROM norm),
@@ -3404,10 +3409,10 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.random_projection(emb, n_proj=8, dim=64, quant=1_000_000)
 
 
-_TOKEN_ACCT_ORACLE = r"""WITH base AS (
+_TOKEN_ACCT_ORACLE = rf"""WITH base AS (
   SELECT source, lang, doc_id,
-         CAST(len(string_split_regex(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), '\s+')) AS BIGINT) AS n_tokens,
-         md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp
+         CAST(len(string_split_regex({_NORM_TEXT}, '\s+')) AS BIGINT) AS n_tokens,
+         md5({_NORM_TEXT}) AS fp
   FROM documents
 ),
 keep AS (SELECT fp, MIN(doc_id) AS keep_id FROM base GROUP BY fp)
@@ -3470,14 +3475,15 @@ def corpus_token_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SNAPSHOT_DIFF_ORACLE = r"""WITH old AS (
-  SELECT doc_id AS id, md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g')) AS fp_old
+_SNAPSHOT_DIFF_ORACLE = rf"""WITH old AS (
+  SELECT doc_id AS id, md5({_NORM_TEXT}) AS fp_old
   FROM documents WHERE doc_id % 7 <> 3
 ),
 new AS (
   SELECT doc_id AS id,
-         md5(regexp_replace(trim(lower(
-           CASE WHEN doc_id % 13 = 2 THEN text || ' v2' ELSE text END)), '\s+', ' ', 'g')) AS fp_new
+         md5({X.normalize_text_sql(
+             "CASE WHEN doc_id % 13 = 2 THEN text || ' v2' ELSE text END"
+         )}) AS fp_new
   FROM documents WHERE doc_id % 11 <> 5
 ),
 diff AS (
@@ -3569,8 +3575,8 @@ _BPE_MERGES = [
 ]
 
 _BPE_ENCODE_ORACLE = (
-    r"""WITH norm AS (
-  SELECT regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t FROM documents
+    rf"""WITH norm AS (
+  SELECT {_NORM_TEXT} AS t FROM documents
 ),
 wc AS (
   SELECT word, CAST(COUNT(*) AS BIGINT) AS n
@@ -3605,7 +3611,7 @@ def bpe_encode_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
 # check, as ONE certified composition (the batch twin of streaming/dedup's
 # foreachBatch hook, with the bloom front-end the docstrings promise)
 # ---------------------------------------------------------------------------
-_FP_SQL = r"md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'))"
+_FP_SQL = f"md5({_NORM_TEXT})"
 
 _ADMISSION_ORACLE = f"""WITH batch AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1
@@ -3640,7 +3646,7 @@ hits AS (
 verdict AS (SELECT key, MIN(hit) = 1 AS maybe_present FROM hits GROUP BY key),
 exact AS (SELECT b.doc_id FROM bfp b JOIN cfp c USING (fp)),
 norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS t
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 toks AS (SELECT id, string_split_regex(t, '\\s+') AS tk FROM norm),
@@ -3739,8 +3745,8 @@ def ingestion_admission_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BPE_SOURCE_ORACLE = (
-    r"""WITH norm AS (
-  SELECT source, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+    rf"""WITH norm AS (
+  SELECT source, {_NORM_TEXT} AS t
   FROM documents
 ),
 docwords AS (
@@ -3800,7 +3806,7 @@ _RRF_QUERY_DOCS = [0, 1, 2, 3, 4]
 _RRF_QLIST = ", ".join(str(i) for i in _RRF_QUERY_DOCS)
 
 _RRF_ORACLE = rf"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 qt AS (
@@ -4011,7 +4017,7 @@ def ccnet_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRETOK_PAT = r"'s|'t|'re|'ve|'m|'ll|'d| ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s']+|\s+"
 
 _PRETOK_ORACLE = rf"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 per AS (
@@ -4076,8 +4082,8 @@ def regex_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # owner as min(id) inside the doc-frequency aggregate itself, so the
 # per-doc novel count never joins back to the exploded shingle table.
 # ---------------------------------------------------------------------------
-_NOVELTY_ORACLE = r"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+_NOVELTY_ORACLE = rf"""WITH norm AS (
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 base AS (SELECT id, string_split_regex(t, '\s+') AS tk FROM norm),
@@ -4224,9 +4230,9 @@ def label_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # source); the Spark plan replays it as the bucketed two-pass — full
 # buckets admitted by their aggregates, one crossing bucket refined.
 # ---------------------------------------------------------------------------
-_TOKEN_BUDGET_ORACLE = r"""WITH base AS (
+_TOKEN_BUDGET_ORACLE = rf"""WITH base AS (
   SELECT source, doc_id AS id,
-         CAST(len(string_split_regex(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), '\s+')) AS BIGINT) AS n_tokens,
+         CAST(len(string_split_regex({_NORM_TEXT}, '\s+')) AS BIGINT) AS n_tokens,
          md5(CAST(doc_id AS VARCHAR)) AS h
   FROM documents
 ),
@@ -4274,8 +4280,8 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (cross_source_dups lists the offending doc pairs; this is the
 # aggregate slice-vs-slice view that drives mixing decisions).
 # ---------------------------------------------------------------------------
-_SOURCE_OVERLAP_ORACLE = r"""WITH norm AS (
-  SELECT d.source, regexp_replace(trim(lower(d.text)), '\s+', ' ', 'g') AS t
+_SOURCE_OVERLAP_ORACLE = rf"""WITH norm AS (
+  SELECT d.source, {X.normalize_text_sql("d.text")} AS t
   FROM documents d
 ),
 base AS (SELECT source, string_split_regex(t, '\s+') AS tk FROM norm),
@@ -4317,8 +4323,8 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Registered WITH max_fp_df so the skew guard itself is certified (the
 # dedup_jaccard_inverted convention).
 # ---------------------------------------------------------------------------
-_WINNOW_ORACLE = r"""WITH norm AS (
-  SELECT doc_id AS id, regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+_WINNOW_ORACLE = rf"""WITH norm AS (
+  SELECT doc_id AS id, {_NORM_TEXT} AS t
   FROM documents
 ),
 base AS (SELECT id, string_split_regex(t, '\s+') AS tk FROM norm),
@@ -4530,7 +4536,7 @@ _ZIPF_K = 64
 _ZIPF_ORACLE = rf"""WITH tc AS (
   SELECT source, t AS term, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
     SELECT d.source,
-           unnest(string_split(regexp_replace(trim(lower(d.text)), '\s+', ' ', 'g'), ' ')) AS t
+           unnest(string_split({X.normalize_text_sql("d.text")}, ' ')) AS t
     FROM documents d
   ) WHERE t <> '' GROUP BY source, t
 ),
@@ -4613,7 +4619,7 @@ _DISTINCTIVE_K = 8
 _DISTINCTIVE_ORACLE = rf"""WITH tok AS (
   SELECT source, doc_id, term FROM (
     SELECT d.source, d.doc_id,
-           unnest(string_split(regexp_replace(trim(lower(d.text)), '\s+', ' ', 'g'), ' ')) AS term
+           unnest(string_split({X.normalize_text_sql("d.text")}, ' ')) AS term
     FROM documents d
   ) WHERE term <> ''
 ),
@@ -5705,9 +5711,9 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mirrors X.gopher_quality_rules exactly: all-integer cross-multiplied
 # thresholds (no float division anywhere), lines from the RAW text, the
 # t <> upper(t) letter test over already-lowercased tokens.
-_GOPHER_ORACLE = r"""WITH norm AS (
+_GOPHER_ORACLE = rf"""WITH norm AS (
   SELECT doc_id, source, text,
-         regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS t
+         {_NORM_TEXT} AS t
   FROM documents
 ),
 m AS (
@@ -5901,9 +5907,9 @@ def leakage_safe_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (cross-multiplied), floor-of-double share division (identical IEEE
 # division in both engines at token magnitudes far below 2^53), unique
 # (cap, source) ordering so RANGE and ROWS window frames coincide.
-_UNIMAX_ORACLE = r"""WITH sizes AS (
+_UNIMAX_ORACLE = rf"""WITH sizes AS (
   SELECT source,
-    CAST(SUM(len(string_split_regex(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), '\s+'))) AS BIGINT) AS n_tokens
+    CAST(SUM(len(string_split_regex({_NORM_TEXT}, '\s+'))) AS BIGINT) AS n_tokens
   FROM documents GROUP BY source
 ),
 budget AS (SELECT CAST(19 * SUM(n_tokens) // 10 AS BIGINT) AS b FROM sizes),
@@ -6398,9 +6404,7 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # strictly subsumed by `dedup_lsh_band_sweep`, whose n_bands=4 row
 # carries the identical n_true_pairs/n_candidates/n_found and derived
 # recall/precision for the same signatures — and the sweep computes the
-# other two configs from the SAME signature pass. Its window slot went
-# to `window_suite`'s round-6 freshness re-certification (the 50-row
-# driver window was exactly full).
+# other two configs from the SAME signature pass.
 
 
 # ---------------------------------------------------------------------------

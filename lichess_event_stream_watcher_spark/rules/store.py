@@ -198,11 +198,13 @@ class SignupRulesManager:
         with self._lock:
             return [r for r in self.rules if r.is_active(now)]
 
-    def caught(self, name: str, username: str, event_time: dt.datetime | None = None) -> None:
+    def caught(self, name: str, username: str, event_time: dt.datetime | None = None) -> bool:
+        """Per-match stats update, in memory only: the engine saves once
+        per micro-batch. A rule removed since the batch dispatched it is
+        skipped. Returns whether any stats changed."""
         with self._lock:
-            rule = self._require(name)
-            if rule.caught(username, event_time):
-                self.save()
+            rule = self.find_rule(name)
+            return rule is not None and rule.caught(username, event_time)
 
     # -- expiry lifecycle (src/eventhandler.rs:432-487) --------------------
     def expiry_sweep(self, now: dt.datetime | None = None) -> Iterator[tuple[str, Rule]]:

@@ -127,6 +127,49 @@ def test_batch_matching_actions_stats(spark, engine):
     assert "No, that user has not been seen" in engine._seen_report("nobody")
 
 
+def test_batch_saves_rules_file_once(spark, engine):
+    """Stats from every match in a micro-batch reach the rules file in ONE
+    rewrite; a batch with no match leaves the file alone."""
+    saves = []
+    save = engine.store.save
+    engine.store.save = lambda: (saves.append(1), save())
+    rows = [
+        u("Alice", email="spam@x.y"),
+        u("alice2", email="spam@x.y"),
+        u("BotOne"),
+        u("BotTwo", email="spam@x.y"),
+    ]
+    engine.process_batch(spark.createDataFrame(rows, USER_SCHEMA_DDL))
+    assert len(saves) == 1
+    on_disk = SignupRulesManager(engine.store.rules_path)
+    assert on_disk.find_rule("spam").match_count == 3
+    assert on_disk.find_rule("bots").match_count == 2
+
+    engine.process_batch(spark.createDataFrame([u("Quiet")], USER_SCHEMA_DDL))
+    assert len(saves) == 1
+
+
+def test_rule_removed_between_dispatch_and_stats(spark, engine):
+    """A moderator ``remove`` landing after a rule's actions were dispatched
+    but before its stats commit skips the stats update instead of raising
+    (which would end the streaming query)."""
+    dispatch = engine._dispatch_actions
+
+    def dispatch_then_remove(rule, username, delay_ms):
+        dispatch(rule, username, delay_ms)
+        if rule.name == "bots":
+            engine.store.remove_rule("bots")
+
+    engine._dispatch_actions = dispatch_then_remove
+    rows = [u("BotMaster", email="spam@x.y")]
+    engine.process_batch(spark.createDataFrame(rows, USER_SCHEMA_DDL))
+    assert engine.store.find_rule("bots") is None
+    assert "/mod/BotMaster/close" in {ep for ep, _ in engine.mod_api.api_calls}
+    assert engine.store.find_rule("spam").match_count == 1
+    assert SignupRulesManager(engine.store.rules_path).find_rule("spam").match_count == 1
+    assert engine.store.caught("bots", "BotMaster") is False
+
+
 def test_notify_dedup_same_user(spark, engine):
     rows = [u("Dup", email="spam@x.y"), u("dup", email="spam2@x.y")]
     engine.process_batch(spark.createDataFrame(rows, USER_SCHEMA_DDL))

@@ -570,7 +570,8 @@ def test_ann_multiprobe_recall_dominates_single_probe(spark, sf_dir):
 def test_paragraph_dedup_edge_cases(spark):
     """All-boilerplate docs come back with empty text (not dropped);
     unique paragraphs keep their original order; min_df bounds the
-    blocklist to genuinely repeated paragraphs."""
+    blocklist to genuinely repeated paragraphs; whitespace-padded copies
+    are one exact-dedup group."""
     rows = [
         (1, "alpha beta. shared footer. gamma delta"),
         (2, "epsilon zeta. shared footer"),
@@ -585,6 +586,15 @@ def test_paragraph_dedup_edge_cases(spark):
     assert got[3].clean_text == "" and got[3].n_paras_kept == 0
     assert got[4].clean_text == "solo paragraph stays"
     assert set(got) == {1, 2, 3, 4}
+
+    # whitespace collapses before the trim, so tab- and newline-padded
+    # copies share one exact-dedup fingerprint group
+    padded = spark.createDataFrame(
+        list(enumerate(["data scan", "\tdata  scan", "DATA scan\n"])),
+        "doc_id bigint, text string",
+    )
+    groups = D.exact_dedup_groups(padded).collect()
+    assert [(g.keep_id, g.n_dups) for g in groups] == [(0, 3)]
 
 
 def test_serving_topk_equals_plain_window(spark, sf_dir):

@@ -1,228 +1,25 @@
-"""Registry certification-policy guards (no SparkSession needed).
+"""Registry policy guards (no SparkSession needed).
 
-Rounds 2-4 each ended with ~40 registered queries that no driver window
-had ever hash-checked, because registration outpaced the 50-row
-correctness window. These tests make that debt a CI failure instead of a
-verdict finding: every registered query must either sit inside the
-current driver window (the head-50 of ``_DRIVER_PRIORITY``) or already
-hold a lifetime green row in a committed ``CORRECTNESS_r*.json``.
-
-Round 6 (the backlog is zero) adds the FRESHNESS rule: a green row decays
-— any query whose newest green row is more than ``STALE_ROUNDS`` rounds
-old must be back in the window head. Rotating the 50 slots over the
-~177-query registry on that bound re-certifies everything on a <= 4-round
-cycle, so "green" always means "green through reasonably current code".
-
-Round 8 adds the CHANGED-SINCE-GREEN rule (registry_freshness.py): age is
-not the only decay — a green row also stops certifying the moment the
-query's backing code changes, so queries whose function/oracle/operator
-closure differs from the state at their green commit must re-enter the
-declared rotation immediately, not when their row goes stale.
+Every registered query must carry a DuckDB oracle, so that
+``tests/test_oracle_parity.py`` hash-checks the whole registry on every
+run instead of settling for a row count.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# Queries whose output is legitimately not hash-comparable cross-engine
-# (documented in each one's docstring); everything else must carry an
-# oracle so the driver records a full hash check, not rows-only. Empty
-# since round 8: the last entry (sketch_stats) was replaced by
-# sketch_error_bounds, which emits exact values + boolean error-bound
-# verdicts instead of raw engine-specific sketch estimates — every
-# registration now carries a full hash oracle.
-ROWS_ONLY_ALLOWLIST: set[str] = set()
 
-DRIVER_WINDOW = 50
-
-# A green row older than this many rounds (vs the newest committed
-# CORRECTNESS file) no longer certifies current code by itself. 4 is the
-# strict rotation cycle for ~177 queries over 50 slots (ceil(177/50)) and
-# the largest bound that never turns a round RED at its start: a query
-# certified in round k must re-enter the window during round k+4 (when
-# the newest committed file is r(k+3) and k == horizon), so each round
-# opens green and the test forces the rotation within the round.
-STALE_ROUNDS = 4
-
-
-def _registry():
+def test_every_query_has_an_oracle():
     import __spark_entry__ as entry
 
-    return entry.queries(), entry.oracle_sql()
-
-
-def _green_rounds() -> dict[str, int]:
-    """Newest round with a FULL HASH green row per query (rows_match alone
-    does not certify an oracled query — a hash mismatch with matching row
-    counts must not count as green)."""
-    newest: dict[str, int] = {}
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
-        for name, row in json.load(open(path)).items():
-            if row.get("hash_match"):
-                newest[name] = max(newest.get(name, 0), rnd)
-    return newest
-
-
-def _max_round() -> int:
-    rounds = [
-        int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
-        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-    ]
-    return max(rounds) if rounds else 0
-
-
-def _window(qs) -> list[str]:
-    from lichess_event_stream_watcher_spark.queries import _DRIVER_PRIORITY
-
-    return [n for n in _DRIVER_PRIORITY if n in qs][:DRIVER_WINDOW]
-
-
-def test_driver_priority_names_are_all_registered():
-    from lichess_event_stream_watcher_spark.queries import _DRIVER_PRIORITY
-
-    qs, _ = _registry()
-    dead = [n for n in _DRIVER_PRIORITY if n not in qs]
-    assert not dead, f"_DRIVER_PRIORITY names without a registration: {dead}"
-    dupes = [n for n in set(_DRIVER_PRIORITY) if _DRIVER_PRIORITY.count(n) > 1]
-    assert not dupes, f"duplicated window slots: {dupes}"
-
-
-def test_every_query_is_window_covered_or_lifetime_green():
-    qs, _ = _registry()
-    covered = set(_window(qs)) | set(_green_rounds()) | ROWS_ONLY_ALLOWLIST
-    debt = sorted(n for n in qs if n not in covered)
-    assert not debt, (
-        f"{len(debt)} registered queries are outside the {DRIVER_WINDOW}-row "
-        f"driver window AND have no lifetime hash-green driver row — "
-        f"registering them re-opens the certification backlog. Either rotate "
-        f"them into the window head or defer registration: {debt}"
-    )
-
-
-def test_no_stale_green_outside_window():
-    """The freshness rotation rule, mechanized: every registered query must
-    hold a hash-green row at most STALE_ROUNDS rounds old, or sit in the
-    current window head (about to be re-certified). Allowlisted rows-only
-    queries are exempt (the driver cannot green them)."""
-    qs, _ = _registry()
-    newest = _green_rounds()
-    horizon = _max_round() - STALE_ROUNDS
-    window = set(_window(qs))
-    stale = sorted(
-        n
-        for n in qs
-        if n not in window
-        and n not in ROWS_ONLY_ALLOWLIST
-        and newest.get(n, -(10**9)) <= horizon
-    )
-    assert not stale, (
-        f"{len(stale)} queries hold only stale green rows (newest <= round "
-        f"{horizon}) and are not queued in the current {DRIVER_WINDOW}-row "
-        f"window — rotate them into the window head: "
-        f"{[(n, newest.get(n)) for n in stale]}"
-    )
-
-
-def test_changed_since_green_queries_are_declared():
-    """The changed-since-green preemption rule, mechanized (round-7 verdict
-    task #1): a green row certifies the CODE STATE at the commit that
-    recorded it. If a query's backing code — its function (with oracle),
-    the same-module helpers/constants it reaches, or any package module in
-    its import closure — differs between that commit and the working tree,
-    the row no longer vouches for current code, and the query must appear
-    in the declared rotation (``_DRIVER_PRIORITY``: the 50-slot window
-    about to re-certify it, or the explicit queue behind it). This is what
-    the round-6/7 builders did by hand at rotation time; running it as a
-    test also catches POST-rotation drift, the gap round 7's verdict
-    found. Uncommitted working-tree edits flag immediately."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    import registry_freshness as rf
-    from lichess_event_stream_watcher_spark.queries import _DRIVER_PRIORITY
-
-    qs, _ = _registry()
-    newest = _green_rounds()
-    declared = set(_DRIVER_PRIORITY)
-    offenders = []
-    for name, fn in qs.items():
-        if name in declared or name not in newest:
-            continue  # queued for re-cert / no green row (backlog test's job)
-        reasons = rf.query_changed_since(fn, rf.round_commit(newest[name]))
-        if reasons:
-            offenders.append((name, newest[name], reasons))
-    assert not offenders, (
-        f"{len(offenders)} queries hold green rows that predate changes to "
-        f"their backing code and are not in the declared rotation — add them "
-        f"to _DRIVER_PRIORITY (window head to re-certify now, queue to "
-        f"declare the intent): "
-        + "; ".join(f"{n} (r{r}: {', '.join(rs)})" for n, r, rs in offenders)
-    )
-
-
-def test_rows_only_registrations_are_explicitly_allowlisted():
-    qs, oracles = _registry()
-    rows_only = {n for n in qs if n not in oracles}
-    stray = rows_only - ROWS_ONLY_ALLOWLIST
-    assert not stray, (
-        f"queries registered without an oracle but not allowlisted: "
-        f"{sorted(stray)} — add an oracle (preferred) or document why the "
-        f"output is not hash-comparable and extend the allowlist"
-    )
-    stale = ROWS_ONLY_ALLOWLIST - set(qs)
-    assert not stale, f"allowlist entries no longer registered: {sorted(stale)}"
-
-
-def test_freshness_analyzer_mechanics():
-    """registry_freshness unit surface: relative-import resolution, the
-    docstring/comment invariance of fingerprints, and that analysis of a
-    live query yields a real fingerprint plus engine-module backing."""
-    import ast
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    import registry_freshness as rf
-
-    pkg = rf.PKG
-    # relative-import resolution (module 'pkg.rules.store')
-    assert rf._resolve_from(f"{pkg}.rules.store", 1, "model") == f"{pkg}.rules.model"
-    assert rf._resolve_from(f"{pkg}.rules.store", 2, "lua_translate") == f"{pkg}.lua_translate"
-    assert rf._resolve_from(f"{pkg}.queries_pipeline", 1, None) == pkg
-    assert rf._resolve_from(f"{pkg}.queries_pipeline", 0, "pyspark.sql") is None
-
-    # docstrings and comments never flag: same dump either way
-    a = ast.parse('def f(x):\n    """doc."""\n    # comment\n    return x + 1\n')
-    b = ast.parse('def f(x):\n    """different doc."""\n    return x + 1  # other\n')
-    assert rf._node_dump(a.body[0]) == rf._node_dump(b.body[0])
-    c = ast.parse('def f(x):\n    return x + 2\n')
-    assert rf._node_dump(a.body[0]) != rf._node_dump(c.body[0])
-
-    # live analysis: a pipeline query fingerprints non-trivially and backs
-    # onto engine modules through the import closure
-    qs, _ = _registry()
-    fp, backing = rf._analyze(
-        qs["dedup_minhash_lsh"].__module__, qs["dedup_minhash_lsh"].__name__, None
-    )
-    assert "func:" in fp and "<missing-func" not in fp
-    closure = rf._closure(backing)
-    assert any(p.endswith("operators/dedup.py") for p in closure)
-    assert any(p.endswith("testdata.py") for p in closure)
-    # an identical second run is cached and equal
-    assert rf._analyze(
-        qs["dedup_minhash_lsh"].__module__, qs["dedup_minhash_lsh"].__name__, None
-    ) == (fp, backing)
-
-    # a query certified at CURRENT HEAD with no working-tree drift in its
-    # backing would report no reasons; simulate by comparing HEAD to HEAD
-    # via the module-dump path on an engine module
-    head = rf.round_commit(7)
-    assert head is not None and len(head) == 40
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    missing = sorted(n for n in qs if n not in oracles)
+    assert not missing, f"queries registered without an oracle: {missing}"
+    stray = sorted(n for n in oracles if n not in qs)
+    assert not stray, f"oracles without a registered query: {stray}"
 
 
 def test_scale_probe_fit_and_fixture_helpers():
