@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.enrich import device_info_column, enrich_geoip_banded
-from ..plans.compile import matches_column
+from ..plans.compile import matches_column, rule_signature
 from ..rules.model import UTC, MIN_UTC, Action, Rule
 from ..rules.store import SignupRulesManager
 from ..schemas import USER_SCHEMA
@@ -151,24 +151,31 @@ class Engine:
         # and amortize across micro-batches — plan composition is the
         # dominant driver-side cost of a warm batch.
         self._matches_cache: tuple[tuple, Any] | None = None
+        # per-rule scan elements by rule_signature, so a rule-set change
+        # compiles only the rules that joined it
+        self._rule_elements: dict[tuple, Any] = {}
         self._device_col = None
         self._error_acc = None
 
     # -- the data path (src/eventhandler.rs:60-283) ------------------------
 
     def _rule_scan_column(self, active: list[Rule], spark=None):
-        """The matched-rules array Column, rebuilt only when the active
-        ruleset changes (name/criterion/gate signature). CODE predicates
-        capture the engine's error accumulator (one per engine, created on
-        first use) so executor-side rule errors surface on the notify
-        stream (src/eventhandler.rs:258-272) instead of dying in a worker
-        log."""
+        """The matched-rules array Column, reassembled only when the active
+        ruleset changes (name/criterion/gate signature), from per-rule
+        elements that are built once per rule. CODE predicates capture the
+        engine's error accumulator (one per engine, created on first use)
+        so executor-side rule errors surface on the notify stream
+        (src/eventhandler.rs:258-272) instead of dying in a worker log."""
         if self._error_acc is None and spark is not None:
             from ..lua_compat import make_error_accumulator
 
             self._error_acc = make_error_accumulator(spark.sparkContext)
-        key = tuple((r.name, r.criterion.kind, r.criterion.value, r.susp_ip) for r in active)
+        key = tuple(rule_signature(r) for r in active)
         if self._matches_cache is None or self._matches_cache[0] != key:
+            live = set(key)
+            self._rule_elements = {
+                s: e for s, e in self._rule_elements.items() if s in live
+            }
             # the engine scans ENRICHED frames (enrich() always emits
             # geoip + device, NULL-structed when no range table is
             # wired), so CODE predicates get both wired through — without
@@ -181,6 +188,7 @@ class Engine:
                     active,
                     cols={"geoip": "geoip", "device": "device"},
                     error_acc=self._error_acc,
+                    elements=self._rule_elements,
                 ),
             )
         return self._matches_cache[1]

@@ -93,13 +93,11 @@ def _lr_feats_pdf(feats: DataFrame, label_col: str, feat_cols: tuple[str, ...]):
     distributed path owns the no-rows error)."""
     import numpy as np
 
-    from .util import plan_size_bytes, small_corpus_cache_limit
+    from .util import small_corpus_pdf
 
-    est = plan_size_bytes(feats)
-    if est is None or est > small_corpus_cache_limit(feats):
-        return None
-    pdf = feats.select(label_col, *feat_cols).toPandas()
-    if len(pdf) == 0 or pdf.isna().any().any():
+    cols = (label_col, *feat_cols)
+    pdf = small_corpus_pdf(feats.select(*cols), feats, nonnull=cols)
+    if pdf is None or len(pdf) == 0:
         return None
     y = pdf[label_col].to_numpy(dtype=np.int64)
     xmat = pdf[list(feat_cols)].to_numpy(dtype=np.int64)

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import fingerprint, normalize_text, tokens
-from .util import plan_size_bytes, small_corpus_cache_limit, spread
+from .util import persist_if_small, small_corpus_pdf, spread
 
 DEFAULT_MINHASH_K = 16
 DEFAULT_BANDS = 4
@@ -207,121 +207,95 @@ def jaccard_pairs(
     # shouldn't run when its answer is predetermined.
     if dense_vocab_limit > 0 and dense_bytes_limit > 0:
         id_type = df.schema[id_col].dataType.simpleString()
-        # Small-corpus fast tier (round-10): when Catalyst's INPUT size
-        # estimate admits the small-corpus gate, ONE Arrow collect of the
-        # shingle rows serves the probe AND the dense build — the gates
-        # evaluate on EXACT counts (no HLL), and an admitted dense path
-        # costs zero further jobs before the candidate map. This replaced
-        # the round-10 interim persist-for-the-probe (one cache fill +
-        # three cached scans) with one transfer. A corpus past the gate
-        # keeps the distributed-probe shape below — collecting a
-        # corpus-sized shingle table is exactly the anti-pattern the
-        # sparse path exists to avoid.
-        pdf = _shingle_pdf_small(sh, df)
-        if pdf is not None:
-            import numpy as np
-            import pandas as pd
-
-            if len(pdf):
-                pdf = pdf.sort_values("id", kind="mergesort", ignore_index=True)
-                codes, uniq = pd.factorize(pdf["shingle"])
-                v, nd = len(uniq), int(pdf["id"].nunique())
-                if v <= dense_vocab_limit and nd * v * 4 <= dense_bytes_limit:
-                    # exact cost gate: dense's unavoidable work is the
-                    # nd^2 intersection scan; postings' is the sum(df^2)
-                    # bucket fanout — same 2x dense margin as the probe
-                    # tier, no Cauchy-Schwarz tier needed (df counts are
-                    # a bincount away)
-                    dfreq = np.bincount(codes).astype(np.float64)
-                    if nd * nd <= 2.0 * float((dfreq * dfreq).sum()):
-                        return _jaccard_pairs_dense_pdf(
-                            df.sparkSession, pdf, codes, threshold, id_type
-                        )
-            # exact gates rejected (or empty corpus): sparse fallthrough,
-            # the collected frame is discarded
-        else:
-            return _jaccard_pairs_probe_dispatch(
-                sh,
-                df,
-                threshold,
-                id_type,
-                dense_vocab_limit,
-                dense_bytes_limit,
-                sparse_strategy,
-                prefix_order,
-                n,
-                text_col,
-                id_col,
-                max_shingle_df,
-            )
-    if sparse_strategy == "prefix":
-        return _jaccard_pairs_prefix(
-            shingle_arrays(df, n, text_col, id_col), threshold, order=prefix_order
+        tier, pdf, codes = _self_join_tier(
+            sh, df, dense_vocab_limit, dense_bytes_limit
         )
-    return _jaccard_pairs_inverted(sh, threshold)
-
-
-def _jaccard_pairs_probe_dispatch(
-    sh: DataFrame,
-    df: DataFrame,
-    threshold: float,
-    id_type: str,
-    dense_vocab_limit: int,
-    dense_bytes_limit: int,
-    sparse_strategy: str,
-    prefix_order: str,
-    n: int,
-    text_col: str,
-    id_col: str,
-    max_shingle_df: int | None,
-) -> DataFrame:
-    """The big-input strategy dispatch: distributed HLL probe (one
-    map-side-partial agg job, ~1.05x-accurate) + the two-tier cost gate,
-    then dense (compact distributed collect) or sparse."""
-    probe = sh.agg(
-        F.approx_count_distinct("shingle").alias("v"),
-        F.approx_count_distinct("id").alias("nd"),
-        F.count("*").alias("p"),
-    ).first()
-    nd, v, p = int(probe["nd"]), int(probe["v"]), int(probe["p"])
-    est_bytes = nd * v * 4
-    if v <= dense_vocab_limit and est_bytes <= dense_bytes_limit:
-        # COST gate on top of the FEASIBILITY gate (round-8, measured
-        # on 1x/4x/8x cipher replications of the sf0.1 corpus — see
-        # SCALE.md's scale-exponent probe): dense's unavoidable work
-        # is the nd^2 intersection-count scan of the matmul output;
-        # postings' is the sum(df^2) bucket fanout through a shuffle.
-        # Measured per-unit costs are comparable (~0.1 us/cell vs
-        # /row on local[32]), so compare the counts with a 2x margin
-        # to dense (it also saves a shuffle): 5k docs 3.7 s dense vs
-        # 6.0 s postings; 20k docs 28.7 vs 44.7; 40k docs 159 vs 40
-        # — the margin classifies all three points correctly, while
-        # the bytes limit alone kept admitting dense at 40k docs.
-        # Two tiers so the certified corpora pay nothing extra:
-        # sum(df^2) >= p^2/v (Cauchy-Schwarz), so if nd^2 clears the
-        # UNIFORM lower bound the groupBy probe is skipped; only an
-        # inconclusive bound pays the exact df^2 aggregation.
-        if nd * nd * v <= 2 * p * p:
-            dense_ok = True
-        else:
-            # double-typed sum: a web-scale stop-shingle df can put
-            # sum(df^2) past int64; the gate needs magnitude, not
-            # exactness
-            sum_df2 = float(
-                sh.groupBy("shingle")
-                .agg(F.count("*").alias("d"))
-                .agg(F.sum(F.col("d").cast("double") * F.col("d")))
-                .first()[0]
-                or 0.0
+        if tier == "pdf":
+            return _jaccard_pairs_dense_pdf(
+                df.sparkSession, pdf, codes, threshold, id_type
             )
-            dense_ok = nd * nd <= 2 * sum_df2
-        if dense_ok:
+        if tier == "dense":
             return _jaccard_pairs_dense(sh.drop("n_sh"), threshold, id_type)
     if sparse_strategy == "prefix":
         return _jaccard_pairs_prefix(
             shingle_arrays(df, n, text_col, id_col), threshold, order=prefix_order
         )
     return _jaccard_pairs_inverted(sh, threshold)
+
+
+def _self_join_tier(
+    sh: DataFrame, gate_df: DataFrame, dense_vocab_limit: int, dense_bytes_limit: int
+):
+    """The dense-vs-sparse decision of the exact shingle self-joins
+    (``jaccard_pairs``, ``containment_pairs``), as ``(tier, pdf, codes)``:
+
+    - ``"pdf"``: ``gate_df`` admits the small-corpus gate and the cost
+      gate passed on EXACT counts from ONE Arrow collect of the
+      (id, shingle) rows. ``pdf`` is that frame, id-sorted, and ``codes``
+      its factorized vocabulary: the driver dense build needs zero further
+      jobs (the collect replaces the HLL probe job plus the distributed
+      build's vocabulary shuffle, broadcast join and collect_list
+      pipeline — 3-5 jobs per query build).
+    - ``"dense"``: past the input gate (or on null ids), a distributed
+      HLL probe (one map-side-partial agg job, ~1.05x-accurate) passed;
+      the corpus is never collected.
+    - ``"sparse"``: a gate rejected, or the collected corpus is empty.
+
+    Feasibility: the vocabulary fits ``dense_vocab_limit`` and the
+    nd x v incidence matrix fits ``dense_bytes_limit``. Cost (round-8,
+    measured on 1x/4x/8x cipher replications of the sf0.1 corpus — see
+    SCALE.md's scale-exponent probe): dense's unavoidable work is the
+    nd^2 intersection-count scan of the matmul output; postings' is the
+    sum(df^2) bucket fanout through a shuffle. Measured per-unit costs are
+    comparable (~0.1 us/cell vs /row on local[32]), so the counts compare
+    with a 2x margin to dense (it also saves a shuffle): 5k docs 3.7 s
+    dense vs 6.0 s postings; 20k docs 28.7 vs 44.7; 40k docs 159 vs 40 —
+    the margin classifies all three points correctly, while the bytes
+    limit alone kept admitting dense at 40k docs. sum(df^2) >= p^2/v
+    (Cauchy-Schwarz), so when nd^2 clears that uniform lower bound the
+    exact sum is never computed; only an inconclusive bound pays the
+    df^2 aggregation (a bincount away on the collected frame)."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = small_corpus_pdf(sh.select("id", "shingle"), gate_df, nonnull=("id",))
+    if pdf is not None:
+        if not len(pdf):
+            return "sparse", None, None
+        pdf = pdf.sort_values("id", kind="mergesort", ignore_index=True)
+        codes, uniq = pd.factorize(pdf["shingle"])
+        nd, v, p = int(pdf["id"].nunique()), len(uniq), len(pdf)
+
+        def sum_df2() -> float:
+            dfreq = np.bincount(codes).astype(np.float64)
+            return float((dfreq * dfreq).sum())
+
+    else:
+        codes = None
+        probe = sh.agg(
+            F.approx_count_distinct("shingle").alias("v"),
+            F.approx_count_distinct("id").alias("nd"),
+            F.count("*").alias("p"),
+        ).first()
+        nd, v, p = int(probe["nd"]), int(probe["v"]), int(probe["p"])
+
+        def sum_df2() -> float:
+            # double-typed sum: a web-scale stop-shingle df can put
+            # sum(df^2) past int64; the gate needs magnitude, not
+            # exactness
+            return float(
+                sh.groupBy("shingle")
+                .agg(F.count("*").alias("d"))
+                .agg(F.sum(F.col("d").cast("double") * F.col("d")))
+                .first()[0]
+                or 0.0
+            )
+
+    if v > dense_vocab_limit or nd * v * 4 > dense_bytes_limit:
+        return "sparse", None, None
+    if nd * nd * v > 2 * p * p and nd * nd > 2 * sum_df2():
+        return "sparse", None, None
+    return ("pdf" if pdf is not None else "dense"), pdf, codes
 
 
 def jaccard_pairs_between(
@@ -374,27 +348,22 @@ def jaccard_pairs_between(
     if dense_vocab_limit > 0 and dense_bytes_limit > 0:
         t_new = new.schema[id_col].dataType.simpleString()
         t_old = corpus.schema[id_col].dataType.simpleString()
-        est_old, est_new = plan_size_bytes(corpus), plan_size_bytes(new)
-        limit = small_corpus_cache_limit(corpus)
-        if (
-            est_old is not None
-            and est_old <= limit
-            and est_new is not None
-            and est_new <= limit
-        ):
-            # Small-corpus fast tier (round-10, the between analog of
-            # jaccard_pairs'): TWO Arrow collects replace the two HLL
-            # probes + the dense build's four distributed consumers
-            # (vocab, df join, two groupBy/collect pipelines); the gates
-            # evaluate on EXACT counts, and an admitted dense path costs
-            # zero further jobs before the candidate map. Past the gate
-            # the distributed probe below decides — a corpus-sized side
-            # is never collected.
+        # Small-corpus fast tier (round-10, the between analog of
+        # jaccard_pairs'): when BOTH inputs admit the gate, TWO Arrow
+        # collects replace the two HLL probes + the dense build's four
+        # distributed consumers (vocab, df join, two groupBy/collect
+        # pipelines); the gates evaluate on EXACT counts, and an admitted
+        # dense path costs zero further jobs before the candidate map.
+        # Past the gate the distributed probe below decides — a
+        # corpus-sized side is never collected.
+        old_pdf = small_corpus_pdf(sh_old.select("id", "shingle"), corpus, new)
+        if old_pdf is not None:
             import numpy as np
             import pandas as pd
 
-            old_pdf = sh_old.select("id", "shingle").toPandas()
-            new_pdf = sh_new.select("id", "shingle", "n_sh").toPandas()
+            new_pdf = small_corpus_pdf(
+                sh_new.select("id", "shingle", "n_sh"), corpus, new
+            )
             if (len(old_pdf) and old_pdf["id"].isna().any()) or (
                 len(new_pdf) and new_pdf["id"].isna().any()
             ):
@@ -960,34 +929,6 @@ def _jaccard_pairs_prefix(
     return j.filter(F.col("jaccard") >= threshold)
 
 
-def _shingle_pdf_small(sh: DataFrame, gate_df: DataFrame, cols=("id", "shingle")):
-    """ONE Arrow ``toPandas`` of the shingle relation when the source's
-    Catalyst size estimate admits the small-corpus gate; ``None`` past it.
-
-    Round-10 fast tier shared by the dense-BLAS gates: for a provably-small
-    input, the collected (id, shingle) rows replace the HLL probe job PLUS
-    the dense build's vocabulary shuffle + broadcast join +
-    groupBy/collect_list pipeline (3-5 jobs per query BUILD, paid on every
-    bench rep because strategy selection happens at plan-construction time)
-    with a single Arrow transfer — and every gate quantity (v, nd, p,
-    sum(df^2)) becomes EXACT driver arithmetic instead of an estimate.
-    Past the gate the operators keep the distributed probe + compact
-    vocabulary-index collect shape: the collected bytes here are bounded by
-    the same input estimate that gates the small-corpus persists (guide
-    §5 — the driver only ever holds provably-small data)."""
-    est = plan_size_bytes(gate_df)
-    if est is None or est > small_corpus_cache_limit(gate_df):
-        return None
-    pdf = sh.select(*cols).toPandas()
-    # Null ids -> distributed path: the driver tiers group rows into CSR
-    # docs by sort-adjacency, and NaN != NaN would split equal null ids
-    # into separate rows where the distributed groupBy('id') merges them
-    # (round-10 ADVICE on _csr_from_id_sorted).
-    if len(pdf) and pdf["id"].isna().any():
-        return None
-    return pdf
-
-
 def _csr_from_id_sorted(pdf, codes):
     """CSR arrays from an id-SORTED collected shingle frame: contiguous
     equal-id runs are the matrix rows, ``codes`` (vocabulary indices in row
@@ -1450,20 +1391,12 @@ def _lsh_sig_rows_small(
     import numpy as np
     import pandas as pd
 
-    est = plan_size_bytes(df)
-    if est is None or est > small_corpus_cache_limit(df):
-        return None
     sh = shingles(df, n, text_col, id_col)
-    pdf = sh.select("id", "shingle").toPandas()
+    pdf = small_corpus_pdf(sh.select("id", "shingle"), df, nonnull=("id",))
+    if pdf is None:
+        return None
     if len(pdf) == 0:
         return np.empty(0, object), []
-    if pdf["id"].isna().any():
-        # NaN != NaN, so _csr_from_id_sorted would split equal null ids
-        # into separate CSR rows while the distributed groupBy('id')
-        # merges them into one signature group (round-10 ADVICE) — bail
-        # to the distributed shape, matching the other tiers' gate-reject
-        # behavior.
-        return None
     pdf = pdf.sort_values("id", kind="mergesort", ignore_index=True)
     codes, uniq = pd.factorize(pdf["shingle"])
     ids_all, _sizes, indptr, cols = _csr_from_id_sorted(pdf, codes)
@@ -1543,7 +1476,7 @@ def _cost_census_pdf(
     import pandas as pd
 
     sh = shingles(df, n, text_col, id_col)
-    pdf = _shingle_pdf_small(sh, df)
+    pdf = small_corpus_pdf(sh.select("id", "shingle"), df, nonnull=("id",))
     if pdf is None or len(pdf) == 0:
         return None
     pdf = pdf.sort_values("id", kind="mergesort", ignore_index=True)
@@ -1606,7 +1539,7 @@ def _lsh_pairs_pdf(
 ):
     """Small-corpus LSH candidate tier: banding, bucket grouping, in-bucket
     pair explosion and the cross-band distinct as driver-side numpy over
-    collected signatures — the ``_shingle_pdf_small`` design applied to
+    collected signatures — the small-corpus collect design applied to
     the LSH stage (guide §1.2/§5: for a provably-small corpus the
     distributed shape's band explosion, bucket shuffle, chunked pair
     explosion, width-`shuffle.partitions` re-spread and distinct shuffle
@@ -1820,14 +1753,8 @@ def dedup_cost_census(
     # Small-corpus persist (round-10): this census consumes the shingle
     # relation FOUR ways (df table, the ranked prefix join's two sides,
     # and the MinHash signature aggregation) — uncached, the regex-heavy
-    # shingle pipeline evaluates once per consumer. Same gate + session
-    # registration as containment_pairs; past the gate the census keeps
-    # its cache-free at-scale shape.
-    est_in = plan_size_bytes(df)
-    if est_in is not None and est_in <= small_corpus_cache_limit(df):
-        from .session_cache import register_session_cache
-
-        sh = register_session_cache(sh.persist())
+    # shingle pipeline evaluates once per consumer.
+    sh = persist_if_small(sh, df)
     half = lambda c: F.expr(f"CAST({c} * ({c} - 1) DIV 2 AS BIGINT)")  # noqa: E731
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     postings = dfreq.agg(
@@ -2177,34 +2104,35 @@ def _components_pdf(
     import numpy as np
     import pandas as pd
 
-    lim = small_corpus_cache_limit(nodes)
-    est_n = plan_size_bytes(nodes)
-    est_p = plan_size_bytes(pairs)
-    if est_n is None or est_p is None or est_n > lim or est_p > lim:
-        return None
-    # Round-11 (VERDICT r10 task #7): the row caps now bound the COLLECT
+    # Round-11 (VERDICT r10 task #7): the row caps bound the COLLECT
     # itself, not just the arrays built after it. ``pairs`` is a
     # join-derived relation whose Catalyst size estimate can UNDER-read
-    # (selectivity guesswork), so the old "collect, then check len" order
-    # let a bad estimate pull an unbounded frame onto the driver before
-    # the cap could fire. limit(cap + 1) keeps the transfer bounded by
+    # (selectivity guesswork), so "collect, then check len" would let a
+    # bad estimate pull an unbounded frame onto the driver before the cap
+    # could fire. limit(cap + 1) keeps the transfer bounded by
     # construction: a full result under the cap is unaffected (limit of a
     # smaller set is the set), and cap + 1 collected rows means "over the
     # cap" -> fall back to the distributed fixpoint.
-    ids_pdf = nodes.select(F.col(id_col).alias("id")).limit(max_nodes + 1).toPandas()
-    pairs_pdf = pairs.select("id_a", "id_b").limit(max_pairs + 1).toPandas()
-    if len(ids_pdf) > max_nodes or len(pairs_pdf) > max_pairs:
-        return None
     # Null endpoints poison the factorize-based labeling: pd.factorize
     # encodes NaN/None as code -1, so rank[codes] would WRAP to the last
     # rank and silently merge null nodes into an arbitrary id's component,
     # where the distributed fixpoint keeps null as its own label row
     # (round-10 ADVICE). Nulls -> distributed rounds.
-    if (
-        ids_pdf["id"].isna().any()
-        or pairs_pdf["id_a"].isna().any()
-        or pairs_pdf["id_b"].isna().any()
-    ):
+    ids_pdf = small_corpus_pdf(
+        nodes.select(F.col(id_col).alias("id")).limit(max_nodes + 1),
+        nodes,
+        pairs,
+        nonnull=("id",),
+    )
+    if ids_pdf is None or len(ids_pdf) > max_nodes:
+        return None
+    pairs_pdf = small_corpus_pdf(
+        pairs.select("id_a", "id_b").limit(max_pairs + 1),
+        nodes,
+        pairs,
+        nonnull=("id_a", "id_b"),
+    )
+    if pairs_pdf is None or len(pairs_pdf) > max_pairs:
         return None
     all_ids = pd.concat(
         [ids_pdf["id"], pairs_pdf["id_a"], pairs_pdf["id_b"]],
@@ -2541,16 +2469,8 @@ def containment_pairs(
     # Small-corpus persist (round-10): the per-doc gram arrays feed THREE
     # plan branches (the posting explosion and both verify-join sides), so
     # the regex-heavy shingle pipeline otherwise evaluates three times per
-    # action. Gated on Catalyst's input estimate — a corpus past the gate
-    # keeps the cache-free shape (persisting corpus-sized gram arrays at
-    # 100 TB trades a recompute for cluster-wide storage pressure). The
-    # returned plan is lazy, so the cache is session-registered for the
-    # harness's between-queries drain (the band-sweep precedent).
-    est_in = plan_size_bytes(df)
-    if est_in is not None and est_in <= small_corpus_cache_limit(df):
-        from .session_cache import register_session_cache
-
-        arrays = register_session_cache(arrays.persist())
+    # action.
+    arrays = persist_if_small(arrays, df)
     # Dense-BLAS gate (round-10): on a dense vocabulary the prefix filter
     # cannot prune (observed at sf0.1: 5.86M of 12.5M possible candidate
     # pairs survive it — then a multi-million-row distinct and two
@@ -2571,54 +2491,23 @@ def containment_pairs(
             "id", F.explode_outer("_grams").alias("shingle")
         ).filter(F.col("shingle").isNotNull())
         id_type = df.schema[id_col].dataType.simpleString()
-        # Small-corpus fast tier (round-10, same as jaccard_pairs'): ONE
-        # Arrow collect serves the probe and the dense build, with exact
-        # gate counts; the collect reads through (and fills) the arrays
+        # the small-corpus collect reads through (and fills) the arrays
         # persist above, so the sparse fallthrough's three consumers
-        # still hit the cache. Past the input gate the distributed HLL
-        # probe below decides.
-        pdf = _shingle_pdf_small(sh, df)
-        if pdf is not None:
-            import numpy as np
-            import pandas as pd
-
-            if len(pdf):
-                pdf = pdf.sort_values("id", kind="mergesort", ignore_index=True)
-                codes, uniq = pd.factorize(pdf["shingle"])
-                v, nd = len(uniq), int(pdf["id"].nunique())
-                if v <= dense_vocab_limit and nd * v * 4 <= dense_bytes_limit:
-                    dfreq = np.bincount(codes).astype(np.float64)
-                    if nd * nd <= 2.0 * float((dfreq * dfreq).sum()):
-                        return _containment_directed(
-                            _containment_dense_cand_pdf(
-                                df.sparkSession, pdf, codes, threshold, id_type
-                            ),
-                            threshold,
-                        )
-            # exact gates rejected (or empty corpus): sparse fallthrough
-        else:
-            probe = sh.agg(
-                F.approx_count_distinct("shingle").alias("v"),
-                F.approx_count_distinct("id").alias("nd"),
-                F.count("*").alias("p"),
-            ).first()
-            nd, v, p = int(probe["nd"]), int(probe["v"]), int(probe["p"])
-            if v <= dense_vocab_limit and nd * v * 4 <= dense_bytes_limit:
-                if nd * nd * v <= 2 * p * p:
-                    dense_ok = True
-                else:
-                    sum_df2 = float(
-                        sh.groupBy("shingle")
-                        .agg(F.count("*").alias("d"))
-                        .agg(F.sum(F.col("d").cast("double") * F.col("d")))
-                        .first()[0]
-                        or 0.0
-                    )
-                    dense_ok = nd * nd <= 2 * sum_df2
-                if dense_ok:
-                    return _containment_directed(
-                        _containment_dense_cand(sh, threshold, id_type), threshold
-                    )
+        # still hit the cache
+        tier, pdf, codes = _self_join_tier(
+            sh, df, dense_vocab_limit, dense_bytes_limit
+        )
+        if tier == "pdf":
+            return _containment_directed(
+                _containment_dense_cand_pdf(
+                    df.sparkSession, pdf, codes, threshold, id_type
+                ),
+                threshold,
+            )
+        if tier == "dense":
+            return _containment_directed(
+                _containment_dense_cand(sh, threshold, id_type), threshold
+            )
     hashed = F.array_sort(
         F.transform("_grams", lambda g: F.struct(F.xxhash64(g).alias("h"), g.alias("g")))
     )

@@ -67,59 +67,57 @@ def edit_distance_pairs(
     # equal the levenshtein == 1 filter by construction. Past the gates
     # (input estimate / name count / bucket volume) the distributed
     # bucket-local shape below is unchanged — the 100 TB path.
-    from .util import plan_size_bytes, small_corpus_cache_limit
+    from .util import small_corpus_pdf
 
-    est = plan_size_bytes(df)
-    if est is not None and est <= small_corpus_cache_limit(df):
-        npdf = names.toPandas()
-        if len(npdf) <= 500_000:
-            import pandas as pd
+    npdf = small_corpus_pdf(names, df)
+    if npdf is not None and len(npdf) <= 500_000:
+        import pandas as pd
 
-            buckets: dict[str, list[str]] = {}
-            for s in npdf["id"]:
-                variants = {s}
-                for i in range(len(s)):
-                    variants.add(s[:i] + s[i + 1 :])
-                for v in variants:
-                    buckets.setdefault(v, []).append(s)
-            total = sum(len(m) * (len(m) - 1) // 2 for m in buckets.values())
-            if total <= (1 << 24):
+        buckets: dict[str, list[str]] = {}
+        for s in npdf["id"]:
+            variants = {s}
+            for i in range(len(s)):
+                variants.add(s[:i] + s[i + 1 :])
+            for v in variants:
+                buckets.setdefault(v, []).append(s)
+        total = sum(len(m) * (len(m) - 1) // 2 for m in buckets.values())
+        if total <= (1 << 24):
 
-                def one_edit(x: str, y: str) -> bool:
-                    if len(x) == len(y):
-                        return sum(1 for cx, cy in zip(x, y) if cx != cy) == 1
-                    if abs(len(x) - len(y)) != 1:
-                        return False
-                    lo, hi = (x, y) if len(x) < len(y) else (y, x)
-                    i = 0
-                    while i < len(lo) and lo[i] == hi[i]:
-                        i += 1
-                    return lo[i:] == hi[i + 1 :]
+            def one_edit(x: str, y: str) -> bool:
+                if len(x) == len(y):
+                    return sum(1 for cx, cy in zip(x, y) if cx != cy) == 1
+                if abs(len(x) - len(y)) != 1:
+                    return False
+                lo, hi = (x, y) if len(x) < len(y) else (y, x)
+                i = 0
+                while i < len(lo) and lo[i] == hi[i]:
+                    i += 1
+                return lo[i:] == hi[i + 1 :]
 
-                seen: set[tuple[str, str]] = set()
-                out_a, out_b = [], []
-                for members in buckets.values():
-                    if len(members) < 2:
-                        continue
-                    ms = sorted(set(members))
-                    for i in range(len(ms)):
-                        for j in range(i + 1, len(ms)):
-                            p = (ms[i], ms[j])
-                            if p not in seen:
-                                seen.add(p)
-                                if one_edit(*p):
-                                    out_a.append(p[0])
-                                    out_b.append(p[1])
-                return df.sparkSession.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            "name_a": out_a,
-                            "name_b": out_b,
-                            "dist": [1] * len(out_a),
-                        }
-                    ),
-                    schema="name_a string, name_b string, dist int",
-                )
+            seen: set[tuple[str, str]] = set()
+            out_a, out_b = [], []
+            for members in buckets.values():
+                if len(members) < 2:
+                    continue
+                ms = sorted(set(members))
+                for i in range(len(ms)):
+                    for j in range(i + 1, len(ms)):
+                        p = (ms[i], ms[j])
+                        if p not in seen:
+                            seen.add(p)
+                            if one_edit(*p):
+                                out_a.append(p[0])
+                                out_b.append(p[1])
+            return df.sparkSession.createDataFrame(
+                pd.DataFrame(
+                    {
+                        "name_a": out_a,
+                        "name_b": out_b,
+                        "dist": [1] * len(out_a),
+                    }
+                ),
+                schema="name_a string, name_b string, dist int",
+            )
     # a deletion can repeat (e.g. "aa" -> "a" twice) — but only WITHIN one
     # string's own variant array, so array_distinct dedups map-side; a
     # row-level distinct here would be a second full-data exchange

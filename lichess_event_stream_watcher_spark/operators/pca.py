@@ -96,12 +96,11 @@ def _power_q_pdf(emb: DataFrame, iters: int, dim: int | None, vec_col: str):
     (the slice semantics)."""
     import numpy as np
 
-    from .util import plan_size_bytes, small_corpus_cache_limit
+    from .util import small_corpus_pdf
 
-    est = plan_size_bytes(emb)
-    if est is None or est > small_corpus_cache_limit(emb):
+    pdf = small_corpus_pdf(emb.select(F.col(vec_col).alias("v")), emb)
+    if pdf is None:
         return None
-    pdf = emb.select(F.col(vec_col).alias("v")).toPandas()
     vs = [v for v in pdf["v"].to_list() if v is not None]
     if dim is None:
         if not vs:

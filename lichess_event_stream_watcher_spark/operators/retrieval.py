@@ -62,16 +62,17 @@ def _bm25_pdf(docs: DataFrame, queries: dict, k: int, id_col: str, text_col: str
     import numpy as np
     import pandas as pd
 
-    from .util import plan_size_bytes, small_corpus_cache_limit
+    from .util import small_corpus_pdf
 
-    est = plan_size_bytes(docs)
-    if est is None or est > small_corpus_cache_limit(docs):
-        return None
-    pdf = docs.select(
-        F.col(id_col).alias("id"),
-        tokens(normalize_text(F.col(text_col))).alias("tk"),
-    ).toPandas()
-    if len(pdf) == 0 or pdf["id"].isna().any():
+    pdf = small_corpus_pdf(
+        docs.select(
+            F.col(id_col).alias("id"),
+            tokens(normalize_text(F.col(text_col))).alias("tk"),
+        ),
+        docs,
+        nonnull=("id",),
+    )
+    if pdf is None or len(pdf) == 0:
         return None
     if not pd.api.types.is_integer_dtype(pdf["id"]):
         return None  # the (-score, id) lexsort tie-break assumes int keys

@@ -9,11 +9,6 @@ call, unbounded across repeated calls (bench min-of-N draws, a
 long-lived driver serving thousands of batches) — the round-9 ADVICE
 finding.
 
-This module is deliberately SEPARATE from operators/util.py: the
-freshness analyzer flags every query whose import closure touches a
-changed engine module, and util.py sits in ~25 certified closures while
-only the two persisting registrations reach this one.
-
 Harness contract: loops call :func:`release_session_caches` BETWEEN
 queries, after the action that consumed the plan — never inside a timed
 region (within one entry's min-of-N the cache stays live, which is the

@@ -353,17 +353,16 @@ def _nearest_cells_pdf(emb: DataFrame, cvecs, n: int, id_col: str, vec_col: str)
     import numpy as np
     import pandas as pd
 
-    from .util import plan_size_bytes, small_corpus_cache_limit
+    from .util import small_corpus_pdf
 
-    est = plan_size_bytes(emb)
-    if est is None or est > small_corpus_cache_limit(emb):
-        return None
-    pdf = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
-    if len(pdf) == 0 or pdf["id"].isna().any():
+    pdf = small_corpus_pdf(
+        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        emb,
+        nonnull=("id", "v"),
+    )
+    if pdf is None or len(pdf) == 0:
         return None
     vs = pdf["v"].to_list()
-    if any(v is None for v in vs):
-        return None
     lens = {len(v) for v in vs}
     d = len(cvecs[0][1])
     if lens != {d} or any(len(r[1]) != d for r in cvecs):
@@ -1369,17 +1368,16 @@ def _kmeans_q_collect(
     padding, same reason)."""
     import numpy as np
 
-    from .util import plan_size_bytes, small_corpus_cache_limit
+    from .util import small_corpus_pdf
 
-    est = plan_size_bytes(emb)
-    if est is None or est > small_corpus_cache_limit(emb):
-        return None
-    pdf = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
-    if len(pdf) == 0 or pdf["id"].isna().any():
+    pdf = small_corpus_pdf(
+        emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        emb,
+        nonnull=("id", "v"),
+    )
+    if pdf is None or len(pdf) == 0:
         return None
     vs = pdf["v"].to_list()
-    if any(v is None for v in vs):
-        return None
     lens = {len(v) for v in vs}
     if len(lens) != 1 or (dim is not None and lens != {int(dim)}):
         return None

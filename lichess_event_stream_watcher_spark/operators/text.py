@@ -578,7 +578,7 @@ def charlm_score(
     import pandas as pd
 
     from .session_cache import register_session_broadcast
-    from .util import spread
+    from .util import persist_if_small, spread
 
     # materialize the normalized text ONCE per row behind spread()'s
     # exchange (a projection-collapse barrier), exactly as before
@@ -594,13 +594,7 @@ def charlm_score(
     # made ccnet_quality_buckets regress when scoring went two-pass).
     # Same gate + session registration as dedup_cost_census; past the
     # gate both passes keep the cache-free at-scale shape.
-    from .util import plan_size_bytes, small_corpus_cache_limit
-
-    est_in = plan_size_bytes(df)
-    if est_in is not None and est_in <= small_corpus_cache_limit(df):
-        from .session_cache import register_session_cache
-
-        base = register_session_cache(base.persist())
+    base = persist_if_small(base, df)
     spark = df.sparkSession
     id_type = df.schema[id_col].dataType.simpleString()
 
@@ -799,9 +793,9 @@ def tf_cosine_pairs(
         # below pays probe + vocab distinct/count + entries agg + count:
         # 4-5 build jobs per bench rep). Past the gate, the distributed
         # window below is unchanged.
-        from .dedup import _csr_from_id_sorted, _shingle_pdf_small
+        from .util import small_corpus_pdf
 
-        pdf = _shingle_pdf_small(tok, df, cols=("id", "tok", "tf"))
+        pdf = small_corpus_pdf(tok.select("id", "tok", "tf"), df, nonnull=("id",))
         if pdf is not None and len(pdf):
             import pandas as pd
 

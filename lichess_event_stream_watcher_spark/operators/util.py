@@ -5,6 +5,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session_cache import register_session_cache
+
 
 def spread(df: DataFrame) -> DataFrame:
     """Ensure at least defaultParallelism partitions for CPU-heavy map work.
@@ -36,10 +38,7 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate for a DataFrame's optimized plan, in bytes
     (no job runs — this reads the statistics the planner itself uses, e.g.
     file sizes times filter selectivities). ``None`` when unavailable
-    (Spark Connect, estimation failure). Operators use it to gate
-    LOCAL-ONLY persists: "cache the shared subtree when the input is
-    provably small, recompute when it is not" — at 100 TB the estimate is
-    huge and the operator keeps today's cache-free shape."""
+    (Spark Connect, estimation failure)."""
     try:
         return int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -48,22 +47,69 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-# Default input-size ceiling for the small-corpus persist gate above:
-# conservatively sized so the cached derived table (shingles explode the
-# text ~2x) stays a few hundred MB at worst. Override per session with
-# spark.conf "lesw.smallCorpusCacheBytes" (set to 0 to disable caching).
+# Input-size ceiling of the small-corpus gate below, which admits both the
+# driver tiers' one-transfer collects and the shared-subtree persists:
+# conservatively sized so a collected frame or a cached derived table
+# (shingles explode the text ~2x) stays a few hundred MB at worst. Override
+# per session with spark.conf "lesw.smallCorpusCacheBytes" (0 forces every
+# operator onto its distributed shape).
 SMALL_CORPUS_CACHE_BYTES = 64 * 1024 * 1024
 
 
 def small_corpus_cache_limit(df: DataFrame) -> int:
+    raw = df.sparkSession.conf.get(
+        "lesw.smallCorpusCacheBytes", str(SMALL_CORPUS_CACHE_BYTES)
+    )
     try:
-        return int(
-            df.sparkSession.conf.get(
-                "lesw.smallCorpusCacheBytes", str(SMALL_CORPUS_CACHE_BYTES)
-            )
-        )
-    except Exception:  # noqa: BLE001
-        return SMALL_CORPUS_CACHE_BYTES
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"lesw.smallCorpusCacheBytes must be an integer byte count, got {raw!r}"
+        ) from None
+
+
+def _admits(*gates: DataFrame) -> bool:
+    """True when every gate frame's Catalyst estimate is known and within
+    the small-corpus limit — the input is provably small."""
+    for g in gates:
+        est = plan_size_bytes(g)
+        if est is None or est > small_corpus_cache_limit(g):
+            return False
+    return True
+
+
+def small_corpus_pdf(frame: DataFrame, *gates: DataFrame, nonnull: tuple[str, ...] = ()):
+    """ONE Arrow ``toPandas`` of ``frame`` when every gate frame (the
+    operator's inputs; ``frame`` itself when none are given) is provably
+    small; ``None`` past the gate, or when a ``nonnull`` column holds a
+    null.
+
+    The rule every driver tier follows when it leaves Spark: at test
+    scale the distributed shape's cost is per-job fixed overhead, so a
+    gate-admitted input moves to the driver in one transfer and the tier
+    computes the same rows in numpy; at 100 TB the estimate is huge and
+    the operator keeps its distributed shape. Null keys bail because the
+    tiers group rows by sort-adjacency, and NaN != NaN would split equal
+    null ids that a distributed groupBy merges. Site-specific checks
+    (empty frames, row and vocabulary caps, NaN elements) stay with the
+    caller."""
+    if not _admits(*(gates or (frame,))):
+        return None
+    pdf = frame.toPandas()
+    if len(pdf) and any(pdf[c].isna().any() for c in nonnull):
+        return None
+    return pdf
+
+
+def persist_if_small(frame: DataFrame, gate: DataFrame) -> DataFrame:
+    """``frame`` persisted and session-registered when ``gate`` (its
+    source) is provably small, else ``frame`` unchanged: cache a subtree
+    several plan branches consume when the input is small, recompute it
+    when it is not (persisting corpus-sized derived tables at 100 TB
+    trades a recompute for cluster-wide storage pressure)."""
+    if not _admits(gate):
+        return frame
+    return register_session_cache(frame.persist())
 
 
 def persisted_rdd_ids(df_or_spark) -> set[int]:

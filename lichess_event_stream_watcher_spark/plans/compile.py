@@ -90,31 +90,54 @@ def rule_predicate(
     return pred
 
 
+def rule_signature(rule: Rule) -> tuple:
+    """What a rule's rule-scan element depends on: name, criterion and
+    the susp_ip gate."""
+    return (rule.name, rule.criterion.kind, rule.criterion.value, rule.susp_ip)
+
+
 def matches_column(
     active: list[Rule],
     cols: dict[str, str] | None = None,
     with_actions: bool = False,
     error_acc=None,
+    elements: dict | None = None,
 ) -> Column:
     """The rule-scan expression ALONE: array of matched (rule_name[, actions])
     structs for one event row. A Column is an immutable expression tree not
     bound to any DataFrame, so long-lived callers (the streaming engine) can
     compile it once per RULESET and reuse it across micro-batches — plan
-    composition cost is paid on rule change, not per batch."""
+    composition cost is paid on rule change, not per batch.
+
+    ``elements`` maps ``rule_signature`` to a rule's already-built
+    ``when(pred, struct)`` element; missing entries are built and added.
+    A caller that passes the same dict (with the same ``cols`` and
+    ``error_acc``, and ``with_actions`` off: the signature leaves actions
+    out) on every rule-set change compiles
+    only the rules new to it; reassembling the array from built elements
+    is a small fraction of building them (each costs py4j round trips, a
+    CODE rule a translation and a pandas UDF)."""
+    if elements is None:
+        elements = {}
     structs = []
     for r in active:
-        payload = [F.lit(r.name).alias("rule_name")]
-        if with_actions:
-            # a rule with no actions needs an explicitly TYPED empty
-            # array: bare F.array() is ARRAY<NULL>, which fails struct
-            # unification against other rules' ARRAY<STRING> at analysis
-            acts = (
-                F.array(*[F.lit(a.value) for a in r.actions])
-                if r.actions
-                else F.array().cast("array<string>")
+        sig = rule_signature(r)
+        if sig not in elements:
+            payload = [F.lit(r.name).alias("rule_name")]
+            if with_actions:
+                # a rule with no actions needs an explicitly TYPED empty
+                # array: bare F.array() is ARRAY<NULL>, which fails struct
+                # unification against other rules' ARRAY<STRING> at analysis
+                acts = (
+                    F.array(*[F.lit(a.value) for a in r.actions])
+                    if r.actions
+                    else F.array().cast("array<string>")
+                )
+                payload.append(acts.alias("actions"))
+            elements[sig] = F.when(
+                rule_predicate(r, cols, error_acc), F.struct(*payload)
             )
-            payload.append(acts.alias("actions"))
-        structs.append(F.when(rule_predicate(r, cols, error_acc), F.struct(*payload)))
+        structs.append(elements[sig])
     return F.filter(F.array(*structs), lambda x: x.isNotNull())
 
 

@@ -4833,13 +4833,12 @@ def robust_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MAD and the integer outlier test — every quantity an exact integer,
     # rows identical by construction. Past the gate the bounded
     # histogram-primitive shape below is unchanged — the 100 TB path.
-    from .operators.util import plan_size_bytes, small_corpus_cache_limit
+    from .operators.util import small_corpus_pdf
 
-    est = plan_size_bytes(docs)
-    if est is not None and est <= small_corpus_cache_limit(docs):
+    pdf = small_corpus_pdf(docs.select("source", "n_chars"), docs)
+    if pdf is not None:
         import numpy as np
 
-        pdf = docs.select("source", "n_chars").toPandas()
         rows = []
         for src, vals in pdf.groupby("source", sort=False)["n_chars"]:
             v = np.sort(vals.to_numpy(np.int64))

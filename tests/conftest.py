@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -40,6 +41,28 @@ def _drain_session_caches():
     )
 
     release_session_caches()
+
+
+@contextmanager
+def spark_conf(spark, key, value):
+    """Set one session conf for the block, restoring the prior value (or
+    unsetting it) afterwards."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
+def forced_distributed(spark):
+    """Close the small-corpus gate for the block, so every operator takes
+    its distributed shape — the 100 TB plan that test-sized inputs
+    otherwise never reach."""
+    return spark_conf(spark, "lesw.smallCorpusCacheBytes", "0")
 
 
 @pytest.fixture()

@@ -170,6 +170,36 @@ def test_rule_removed_between_dispatch_and_stats(spark, engine):
     assert engine.store.caught("bots", "BotMaster") is False
 
 
+def test_rule_change_compiles_only_changed_rules(spark, engine, monkeypatch):
+    """After a warm batch, adding a rule compiles that rule alone; the
+    others reuse their scan elements, and a removed rule's element is
+    dropped."""
+    from lichess_event_stream_watcher_spark.plans import compile as compile_mod
+
+    engine.process_batch(spark.createDataFrame([u("BotOne")], USER_SCHEMA_DDL))
+    compiled = []
+    predicate = compile_mod.rule_predicate
+
+    def counting(rule, *args, **kwargs):
+        compiled.append(rule.name)
+        return predicate(rule, *args, **kwargs)
+
+    monkeypatch.setattr(compile_mod, "rule_predicate", counting)
+    engine.store.add_rule(
+        Rule("fresh", Criterion(CriterionKind.USERNAME_CONTAINS, "new"), [Action.NOTIFY_ZULIP])
+    )
+    engine.process_batch(spark.createDataFrame([u("BotNew")], USER_SCHEMA_DDL))
+    assert compiled == ["fresh"]
+    assert engine.store.find_rule("fresh").match_count == 1
+    assert engine.store.find_rule("bots").match_count == 2
+
+    engine.store.remove_rule("fresh")
+    engine.process_batch(spark.createDataFrame([u("BotNewer")], USER_SCHEMA_DDL))
+    assert compiled == ["fresh"]
+    assert {sig[0] for sig in engine._rule_elements} == {"spam", "bots", "susp"}
+    assert engine.store.find_rule("bots").match_count == 3
+
+
 def test_notify_dedup_same_user(spark, engine):
     rows = [u("Dup", email="spam@x.y"), u("dup", email="spam2@x.y")]
     engine.process_batch(spark.createDataFrame(rows, USER_SCHEMA_DDL))

@@ -15,6 +15,7 @@ import re
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from conftest import forced_distributed
 
 from lichess_event_stream_watcher_spark.operators import dedup as D
 
@@ -331,7 +332,7 @@ def test_band_sweep_matches_hashlib_brute_force(spark, texts):
 
 
 def test_dense_distributed_frontend_matches_pdf_tier(spark, sf_dir):
-    """Round-10 pin for the small-corpus fast tier: the three dense-gated
+    """Round-10 pin for the small-corpus fast tier: the four dense-gated
     operators must produce identical rows through the pdf tier (one Arrow
     collect + driver factorize, what every test-sized corpus takes) and
     the big-input distributed front-end (HLL probe + vocabulary-indexed
@@ -339,6 +340,7 @@ def test_dense_distributed_frontend_matches_pdf_tier(spark, sf_dir):
     estimate gate — the conf toggle is how the at-scale shape stays
     covered."""
     from lichess_event_stream_watcher_spark import testdata
+    from lichess_event_stream_watcher_spark.operators import text as X
 
     docs = testdata.load(spark, sf_dir, "documents")
     new = docs.filter("doc_id % 2 = 1")
@@ -351,13 +353,11 @@ def test_dense_distributed_frontend_matches_pdf_tier(spark, sf_dir):
         "self": lambda: D.jaccard_pairs(docs, n=2, threshold=0.5),
         "containment": lambda: D.containment_pairs(docs, n=2, threshold=0.8),
         "between": lambda: D.jaccard_pairs_between(new, old, n=2, threshold=0.5),
+        "tf_cosine": lambda: X.tf_cosine_pairs(docs, threshold=0.5),
     }
     got_pdf = {k: rows(f()) for k, f in runs.items()}
-    spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-    try:
+    with forced_distributed(spark):
         got_dist = {k: rows(f()) for k, f in runs.items()}
-    finally:
-        spark.conf.unset("lesw.smallCorpusCacheBytes")
     for k in runs:
         assert got_pdf[k] == got_dist[k], k
     assert got_pdf["self"], "fixture produced no pairs — the pin is vacuous"
@@ -391,11 +391,8 @@ def test_lsh_and_components_distributed_match_pdf_tier(spark, sf_dir):
         "fuzzy": lambda: FZ.edit_distance_pairs(signups, "username"),
     }
     got_pdf = {k: rows(f()) for k, f in runs.items()}
-    spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-    try:
+    with forced_distributed(spark):
         got_dist = {k: rows(f()) for k, f in runs.items()}
-    finally:
-        spark.conf.unset("lesw.smallCorpusCacheBytes")
     for k in runs:
         assert got_pdf[k] == got_dist[k], k
     assert got_pdf["lsh_b8"], "fixture produced no candidates — vacuous pin"

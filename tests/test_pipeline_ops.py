@@ -2632,16 +2632,22 @@ def test_pca_recovers_planted_dominant_direction(spark):
 
 def test_robust_outliers_match_brute_force(spark, sf_dir):
     """Median/MAD/outlier counts must equal the brute-force pandas
-    computation (type-1 medians: value at rank ceil(n/2))."""
-    import math
+    computation (type-1 medians: value at rank ceil(n/2)), through both
+    the small-corpus driver tier and the distributed histogram shape."""
+    from conftest import forced_distributed
 
     docs = testdata.load(spark, sf_dir, "documents").select("source", "n_chars").toPandas()
     from lichess_event_stream_watcher_spark.queries import all_queries
 
-    got = {
-        r["source"]: (r["median_chars"], r["mad_chars"], r["n_outliers"])
-        for r in all_queries()["robust_length_outliers"](spark, sf_dir).collect()
-    }
+    def run():
+        return {
+            r["source"]: (r["median_chars"], r["mad_chars"], r["n_outliers"])
+            for r in all_queries()["robust_length_outliers"](spark, sf_dir).collect()
+        }
+
+    got = run()
+    with forced_distributed(spark):
+        assert run() == got
     for src, grp in docs.groupby("source"):
         xs = sorted(grp["n_chars"])
         n = len(xs)

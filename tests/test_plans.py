@@ -11,6 +11,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from conftest import forced_distributed
 
 from lichess_event_stream_watcher_spark import fixtures, testdata
 from lichess_event_stream_watcher_spark.operators.enrich import (
@@ -597,11 +598,8 @@ def test_bpe_and_bm25_plan_shapes(spark, sf_dir):
     # tier (LocalTableScan); pin the DISTRIBUTED shape — the 100 TB plan
     # — by disabling the small-corpus gate (same conf-toggle discipline
     # as the jaccard pins)
-    spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-    try:
+    with forced_distributed(spark):
         p = plan_str(entry.queries()["bm25_rsj_topk"](spark, sf_dir))
-    finally:
-        spark.conf.unset("lesw.smallCorpusCacheBytes")
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
     assert "SortMergeJoin" not in p
@@ -880,11 +878,8 @@ def test_lsh_band_sweep_computes_signatures_once(spark, sf_dir):
     from lichess_event_stream_watcher_spark.operators import dedup as D
 
     docs = testdata.load(spark, sf_dir, "documents")
-    spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-    try:
+    with forced_distributed(spark):
         p = plan_str(D.lsh_band_sweep(docs, band_counts=(2, 4, 8), k=16, n=2))
-    finally:
-        spark.conf.unset("lesw.smallCorpusCacheBytes")
     assert len(re.findall(r"Generate explode.*shingle", p)) == 1, p
     assert p.count("Exchange") == 5, p
     assert "Join" not in p

@@ -13,6 +13,7 @@ import math
 
 import pytest
 from pyspark.sql import functions as F
+from conftest import forced_distributed
 
 from lichess_event_stream_watcher_spark import testdata
 from lichess_event_stream_watcher_spark.operators import dedup as D
@@ -91,11 +92,8 @@ def test_cost_census_driver_tier_matches_distributed(spark, sf_dir):
     lesw.smallCorpusCacheBytes=0 — the 100 TB shape)."""
     docs = testdata.load(spark, sf_dir, "documents")
     tiered = _rows(D.dedup_cost_census(docs, threshold=0.5, k=16, bands=4, n=2))
-    spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-    try:
+    with forced_distributed(spark):
         dist = _rows(D.dedup_cost_census(docs, threshold=0.5, k=16, bands=4, n=2))
-    finally:
-        spark.conf.unset("lesw.smallCorpusCacheBytes")
     assert tiered == dist
 
 
@@ -277,13 +275,10 @@ def test_nearest_cells_tier_matches_expression(spark, sf_dir):
     cents = S.kmeans_fit(emb, k=8, iters=2)
     for n in (1, 2):
         tier = _rows(S.nearest_cells(emb, cents, n).select("vec_id", "cent_id", "cell_rank"))
-        spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-        try:
+        with forced_distributed(spark):
             expr = _rows(
                 S.nearest_cells(emb, cents, n).select("vec_id", "cent_id", "cell_rank")
             )
-        finally:
-            spark.conf.unset("lesw.smallCorpusCacheBytes")
         assert tier == expr
     # vectors must round-trip bit-exactly through the tier's Arrow path
     got = {r[0]: list(r[1]) for r in S.nearest_cells(emb, cents, 1).select("vec_id", "embedding").collect()}
@@ -322,18 +317,12 @@ def test_kmeans_quantized_tier_matches_distributed(spark, sf_dir):
     emb = testdata.load(spark, sf_dir, "embeddings")
     for iters in (1, 3):
         tier_c = S.kmeans_fit_quantized(emb, k=8, iters=iters)
-        spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-        try:
+        with forced_distributed(spark):
             dist_c = S.kmeans_fit_quantized(emb, k=8, iters=iters)
-        finally:
-            spark.conf.unset("lesw.smallCorpusCacheBytes")
         assert tier_c == dist_c
     tier_a = _rows(S.kmeans_cells_quantized(emb, tier_c))
-    spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-    try:
+    with forced_distributed(spark):
         dist_a = _rows(S.kmeans_cells_quantized(emb, tier_c))
-    finally:
-        spark.conf.unset("lesw.smallCorpusCacheBytes")
     assert tier_a == dist_a
 
 
@@ -351,11 +340,8 @@ def test_lr_fit_tier_matches_distributed(spark, sf_dir):
     )
     for iters in (1, 6):
         tier_w = C.lr_fit_quantized(feats, iters=iters)
-        spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-        try:
+        with forced_distributed(spark):
             dist_w = C.lr_fit_quantized(feats, iters=iters)
-        finally:
-            spark.conf.unset("lesw.smallCorpusCacheBytes")
         assert tier_w == dist_w
 
 
@@ -367,11 +353,8 @@ def test_power_iteration_tier_matches_distributed(spark, sf_dir):
     emb = testdata.load(spark, sf_dir, "embeddings")
     for iters in (1, 4):
         tier_w = P.power_iteration_quantized(emb, iters=iters, dim=64)
-        spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-        try:
+        with forced_distributed(spark):
             dist_w = P.power_iteration_quantized(emb, iters=iters, dim=64)
-        finally:
-            spark.conf.unset("lesw.smallCorpusCacheBytes")
         assert tier_w == dist_w
 
 
@@ -385,9 +368,6 @@ def test_bm25_tier_matches_distributed(spark, sf_dir):
     qrows = docs.filter(F.col("doc_id").isin([0, 1, 2])).select("doc_id", "text").collect()
     queries = {int(r.doc_id): " ".join((r.text or "").strip().lower().split()[:8]) for r in qrows}
     tier = _rows(bm25_topk(docs, queries, k=20, idf_mode="rsj_sqrt"))
-    spark.conf.set("lesw.smallCorpusCacheBytes", "0")
-    try:
+    with forced_distributed(spark):
         dist = _rows(bm25_topk(docs, queries, k=20, idf_mode="rsj_sqrt"))
-    finally:
-        spark.conf.unset("lesw.smallCorpusCacheBytes")
     assert tier == dist
