@@ -9,14 +9,25 @@ a whole micro-batch:
     seen-window state update (A4/W1)
 
 Scale contract: the distributed part (enrich + rule scan) is a map-only
-projection over event partitions — no shuffle, no state, linear in cluster
-size. Only two things ever reach the driver:
+projection over event partitions — no cache, no state, linear in cluster
+size. Each row carries the names of the rules it matched, and a batch
+reaches the driver in one capped Arrow collect, a top-k that sorts
+matching rows first and then the newest. It holds two things:
 
+- **the batch's tail** — its last ``checked_cap`` (10K) rows in arrival
+  order — for the `seen` window (W1 is a GLOBAL last-10,000-events window,
+  so rows before the tail are evicted immediately by construction);
 - **matched rows** (bounded by match rate, not event rate), for side
-  effects and stats — the reference does the same work single-threaded;
-- **the batch's tail-10K rows** for the `seen` window (W1 is a GLOBAL
-  last-10,000-events window, so rows before the tail are evicted
-  immediately by construction — collecting them would be wasted work).
+  effects and stats — the reference does the same work single-threaded.
+
+The top-k has room for ``MATCH_ROOM`` (100K) matching rows beyond the tail,
+so a batch of any size is enriched and scanned once unless more of its rows
+match than that. Only such a batch runs a second pass, which replaces the
+first result and has room for ``checked_cap + matched_collect_cap + 1``
+rows. So at most that many rows are on the driver at once, and a batch
+whose matches pass ``matched_collect_cap`` raises before any side effect.
+Neither pass depends on the other's result, so a source need not re-read
+the same rows in the same order.
 
 Control events (rule CRUD, status, seen, dry-run) are driver API calls,
 not stream rows (SURVEY.md §1.1): ``handle_command`` parses the DSL and
@@ -31,6 +42,7 @@ import random
 from collections import deque
 from typing import Any
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,6 +74,12 @@ RECENTLY_NOTIFIED_CAP = 2_000  # src/eventhandler.rs:212
 # but ONE overbroad rule (e.g. `username contains a`) could match a whole
 # batch. Refuse loudly past this cap instead of silently collecting it.
 MATCHED_COLLECT_CAP = 1_000_000
+# Matches one top-k collect has room for beyond the seen-window tail. Each
+# top-k task allocates a buffer of twice its limit up front: below G1's
+# humongous size (half a 4 MB region under the 8g driver) it dies young,
+# while room for MATCHED_COLLECT_CAP grew the JVM by GBs over 40 small
+# batches. A batch with more matching rows takes a second pass.
+MATCH_ROOM = 100_000
 
 
 def _plain(v: Any) -> Any:
@@ -156,6 +174,7 @@ class Engine:
         self._rule_elements: dict[tuple, Any] = {}
         self._device_col = None
         self._error_acc = None
+        self._ranges_local: DataFrame | None = None
 
     # -- the data path (src/eventhandler.rs:60-283) ------------------------
 
@@ -211,13 +230,23 @@ class Engine:
                 seen.add(msg)
                 self.messages.post("notify", f"Error evaluating rule {msg}")
 
+    def _local_ranges(self) -> DataFrame:
+        """The GeoIP range table as a pandas-built copy, made on first use:
+        a caller's ``createDataFrame(list)`` frame is a Python RDD, which
+        every batch's broadcast would re-run in Python workers; the copy
+        is a LocalRelation the broadcast reads in the JVM."""
+        if self._ranges_local is None:
+            src = self.geoip_ranges
+            self._ranges_local = src.sparkSession.createDataFrame(src.toPandas(), src.schema)
+        return self._ranges_local
+
     def enrich(self, df: DataFrame) -> DataFrame:
         """P1 + P2; geoip stays NULL when no range table is wired."""
         if self._device_col is None:
             self._device_col = device_info_column(F.col("user_agent"))
         out = df.withColumn("device", self._device_col)
         if self.geoip_ranges is not None:
-            out = enrich_geoip_banded(out, self.geoip_ranges)
+            out = enrich_geoip_banded(out, self._local_ranges())
         else:
             out = out.withColumn(
                 "geoip",
@@ -227,80 +256,70 @@ class Engine:
             )
         return out
 
+    def prepare(self, spark: SparkSession) -> None:
+        """Build what the first batch would otherwise build: the active
+        rule set's scan column and the local range table. A stream calls
+        this before it starts."""
+        self._rule_scan_column(self.store.active_rules(self.now_fn()), spark)
+        if self.geoip_ranges is not None:
+            self._local_ranges()
+
     def process_batch(self, df: DataFrame, hypothetical: bool = False) -> None:
         """One micro-batch through the full pipeline."""
         from ..operators.util import spread
 
         now = self.now_fn()
         # _row_id stamps arrival order BEFORE the repartition so ordering
-        # semantics survive the parallelism widening
-        ordered = spread(
-            df.select(F.monotonically_increasing_id().alias("_row_id"), "*")
-        )
-        enriched = self.enrich(ordered).cache()
-        try:
-            active = self.store.active_rules(now)
-            # ONE Spark job collects both driver-side inputs: the matched
-            # rows (capped) and the last-N arrival-order tail (TakeOrdered)
-            # run as union branches padded to a common schema — one job
-            # submission + one Arrow transfer per batch instead of two.
-            # Matched rows null out the wide payload columns, so their side
-            # of the transfer stays 3 live columns as before.
-            field_types = {f.name: f.dataType for f in enriched.schema.fields}
-            cols = enriched.columns
-            tail_branch = (
-                enriched.orderBy(F.desc("_row_id"))
-                .limit(self.checked_cap)
-                .select(
-                    F.lit(False).alias("_is_match"),
-                    F.lit(None).cast("string").alias("rule_name"),
-                    *cols,
-                )
+        # semantics survive the parallelism widening; a dry-run row is
+        # not widened
+        scanned = df.select(F.monotonically_increasing_id().alias("_row_id"), "*")
+        if not hypothetical:
+            scanned = spread(scanned)
+        scanned = self.enrich(scanned)
+        active = self.store.active_rules(now)
+        order, limit = [F.desc("_row_id")], self.checked_cap
+        if active:  # no active rules -> skip the scan
+            rules = self._rule_scan_column(active, df.sparkSession)
+            scanned = scanned.withColumn(
+                "_rules", F.transform(rules, lambda m: m["rule_name"])
             )
-            if active:
-                keep = {"_row_id", "username"}
-                match_branch = (
-                    enriched.withColumn(
-                        "_match",
-                        F.explode(self._rule_scan_column(active, df.sparkSession)),
-                    )
-                    .select(
-                        F.lit(True).alias("_is_match"),
-                        F.col("_match.rule_name").alias("rule_name"),
-                        *[
-                            (F.col(c) if c in keep else F.lit(None).cast(field_types[c])).alias(c)
-                            for c in cols
-                        ],
-                    )
-                    .limit(self.matched_collect_cap + 1)
-                )
-                both = match_branch.unionAll(tail_branch).toPandas()
-            else:
-                both = tail_branch.toPandas()  # no active rules -> skip the scan
-            is_match = both["_is_match"].astype(bool)
-            matched = both.loc[is_match, ["_row_id", "username", "rule_name"]].to_dict(
-                "records"
+            # matching rows sort before the rest, so one top-k holds the
+            # newest checked_cap rows and every match it has room for
+            order.insert(0, F.desc(F.size("_rules") > 0))
+            limit += min(MATCH_ROOM, self.matched_collect_cap + 1)
+
+        def collect(limit: int) -> pd.DataFrame:
+            return scanned.orderBy(*order).limit(limit).toPandas().sort_values("_row_id")
+
+        # ONE capped collect, each row with the names of the rules it
+        # matched. Below `limit` rows it is the whole batch; at the limit
+        # the batch has at least checked_cap rows, which is the only fact
+        # the eviction branch needs — no separate count() job.
+        got = collect(limit)
+        if active and len(got) == limit:
+            hits = got["_rules"].map(len)
+            if (hits > 0).sum() > limit - self.checked_cap and hits.sum() <= self.matched_collect_cap:
+                # more matching rows than the room, yet not enough to trip
+                # the guard: a second pass with room for all it admits.
+                # Rare (over MATCH_ROOM matching rows in one batch), and
+                # it needs no cut-off from the first, so a source that
+                # re-reads in another order cannot drop or repeat a match
+                del got, hits
+                got = collect(self.checked_cap + self.matched_collect_cap + 1)
+        batch_count = len(got)
+        tail = got.iloc[-self.checked_cap :]
+        # (username, matched rule names) per matching event, arrival order
+        events: list[tuple[str, list[str]]] = []
+        if active:
+            events = [(n, list(r)) for n, r in zip(got["username"], got["_rules"]) if len(r)]
+        if sum(len(r) for _, r in events) > self.matched_collect_cap:
+            raise RuntimeError(
+                f"batch produced more than {self.matched_collect_cap} "
+                "matched rows — an overbroad rule is matching nearly "
+                "everything; refusing to collect it to the driver. "
+                "Disable or narrow the rule, or raise "
+                "engine.matched_collect_cap deliberately."
             )
-            if len(matched) > self.matched_collect_cap:
-                raise RuntimeError(
-                    f"batch produced more than {self.matched_collect_cap} "
-                    "matched rows — an overbroad rule is matching nearly "
-                    "everything; refusing to collect it to the driver. "
-                    "Disable or narrow the rule, or raise "
-                    "engine.matched_collect_cap deliberately."
-                )
-            # len(tail) doubles as the batch count: exact below the cap, and
-            # hitting the cap is the only fact the eviction branch needs —
-            # no separate count() job.
-            tail = (
-                both.loc[~is_match]
-                .drop(columns=["_is_match", "rule_name"])
-                .sort_values("_row_id")
-                .to_dict("records")
-            )
-            batch_count = len(tail)
-        finally:
-            enriched.unpersist()
 
         # executor-side CODE-predicate errors -> notify stream
         # (src/eventhandler.rs:258-272)
@@ -311,7 +330,7 @@ class Engine:
             # every pre-existing entry would be evicted by this batch
             self.recently_checked.clear()
             self.recently_checked_info.clear()
-        for d in tail:
+        for d in tail.drop(columns=["_rules"], errors="ignore").to_dict("records"):
             user_id = (d.get("username") or "").lower()
             self.recently_checked.append(user_id)
             self.recently_checked_info.setdefault(user_id, []).append(d)
@@ -327,22 +346,13 @@ class Engine:
             self.latest_event_utc = now
 
         # -- side effects + stats, in arrival order -------------------------
-        matched.sort(key=lambda r: r["_row_id"])
         stats_changed = False
-        by_event: dict[int, list] = {}
-        order: list[int] = []
-        for m in matched:
-            if m["_row_id"] not in by_event:
-                order.append(m["_row_id"])
-            by_event.setdefault(m["_row_id"], []).append(m)
-        for rid in order:
-            rows = by_event[rid]
-            username = rows[0]["username"]
+        for username, names in events:
             # one jitter draw per event (src/eventhandler.rs:115)
             delay_ms_if_needed = self.rng.randrange(30, 100) * 1000
             fired: list[str] = []
-            for m in rows:
-                rule = self.store.find_rule(m["rule_name"])
+            for name in names:
+                rule = self.store.find_rule(name)
                 if rule is None:  # removed mid-batch
                     continue
                 if hypothetical:
@@ -401,9 +411,10 @@ class Engine:
         self, spark: SparkSession, user: dict[str, Any], hypothetical: bool = True
     ) -> None:
         """The dry-run keystone (§3.3): the SAME pipeline on a 1-row batch."""
-        row = {f.name: user.get(f.name) for f in USER_SCHEMA.fields if f.name not in ("geoip", "device")}
+        names = [f.name for f in USER_SCHEMA.fields if f.name not in ("geoip", "device")]
         schema = "username string, email string, ip string, user_agent string, finger_print string, susp_ip boolean"
-        df = spark.createDataFrame([row], schema)
+        # pandas-built: a LocalRelation, not a Python RDD of one row
+        df = spark.createDataFrame(pd.DataFrame([[user.get(n) for n in names]], columns=names), schema)
         self.process_batch(df, hypothetical=hypothetical)
 
     # -- the control path (src/eventhandler.rs:285-501) ---------------------

@@ -36,6 +36,10 @@ def run_engine_stream(
     seconds") is the production trigger.
     """
 
+    # compile the active rule set now, so the first micro-batch does not
+    # carry it
+    engine.prepare(events.sparkSession)
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         engine.process_batch(batch_df.drop("ingest_time"))
 

@@ -65,6 +65,29 @@ def forced_distributed(spark):
     return spark_conf(spark, "lesw.smallCorpusCacheBytes", "0")
 
 
+def driver_tier_df(spark, rows, ddl):
+    """A pandas-built frame of ``rows``: a LocalRelation whose size
+    Catalyst knows, so the small-corpus gate admits it (a frame built from
+    a Python list carries no size estimate and never reaches the driver
+    tiers)."""
+    import pandas as pd
+
+    from lichess_event_stream_watcher_spark.operators.util import small_corpus_pdf
+
+    names = [c.split()[0] for c in ddl.split(",")]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
+    assert small_corpus_pdf(df) is not None, "the gate does not admit the frame"
+    return df
+
+
+def on_each_tier(spark, run):
+    """``run()`` with the small-corpus gate open (the driver tiers), then
+    closed (the distributed shapes): {tier: result}."""
+    driver = run()
+    with forced_distributed(spark):
+        return {"driver": driver, "distributed": run()}
+
+
 @pytest.fixture()
 def duck(sf_dir):
     # FUNCTION-scoped on purpose: duckdb 1.0.0's buffer accounting leaks

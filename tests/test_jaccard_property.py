@@ -6,7 +6,9 @@ the prefix-filter completeness lemma, the length filter's boundary
 
 Hypothesis drives the corpus; the number of Spark jobs per example is
 bounded by deduplicate=True + small sizes (each example runs 3 strategies
-over <=12 docs)."""
+over <=12 docs). Each example runs on a pandas-built frame twice: once
+through the operators' driver tiers, once forced to the distributed
+shapes."""
 
 from __future__ import annotations
 
@@ -15,7 +17,7 @@ import re
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from conftest import forced_distributed
+from conftest import driver_tier_df, forced_distributed, on_each_tier
 
 from lichess_event_stream_watcher_spark.operators import dedup as D
 
@@ -50,9 +52,7 @@ def _brute_force(texts, n=2, threshold=0.5):
 )
 @given(texts=_CORPUS)
 def test_jaccard_strategies_match_brute_force(spark, strategy, texts):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
-    )
+    df = driver_tier_df(spark, list(enumerate(texts)), "doc_id bigint, text string")
     kw = {
         "dense": {},
         "postings": {"dense_bytes_limit": 0, "sparse_strategy": "postings"},
@@ -65,11 +65,16 @@ def test_jaccard_strategies_match_brute_force(spark, strategy, texts):
             "prefix_order": "df",
         },
     }[strategy]
-    got = {
-        (r.id_a, r.id_b, r.jaccard)
-        for r in D.jaccard_pairs(df, n=2, threshold=0.5, **kw).collect()
-    }
-    assert got == _brute_force(texts), (strategy, texts)
+    runs = on_each_tier(
+        spark,
+        lambda: {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in D.jaccard_pairs(df, n=2, threshold=0.5, **kw).collect()
+        },
+    )
+    want = _brute_force(texts)
+    for tier, got in runs.items():
+        assert got == want, (tier, strategy, texts)
 
 
 @settings(
@@ -85,9 +90,7 @@ def test_jaccard_between_dense_matches_inverted(spark, texts):
     sparse inverted join on corpora that stress empty docs, novel
     new-side shingles (absent from the corpus vocabulary — they count in
     na but never intersect), and exact duplicates across the split."""
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
-    )
+    df = driver_tier_df(spark, list(enumerate(texts)), "doc_id bigint, text string")
     new = df.filter("doc_id % 2 = 1")
     old = df.filter("doc_id % 2 = 0")
 
@@ -99,7 +102,10 @@ def test_jaccard_between_dense_matches_inverted(spark, texts):
             ).collect()
         }
 
-    assert pairs() == pairs(dense_vocab_limit=0), texts
+    runs = on_each_tier(spark, lambda: (pairs(), pairs(dense_vocab_limit=0)))
+    for tier, (dense, inverted) in runs.items():
+        assert dense == inverted, (tier, texts)
+    assert runs["driver"] == runs["distributed"], texts
 
 
 @settings(
@@ -115,9 +121,7 @@ def test_containment_dense_matches_sparse(spark, texts):
     prefix-filtered sparse verify path — including one-token docs, exact
     duplicates (containment 1.0 both directions), and subset docs (the
     asymmetric case the operator exists for)."""
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
-    )
+    df = driver_tier_df(spark, list(enumerate(texts)), "doc_id bigint, text string")
 
     def pairs(**kw):
         return {
@@ -125,7 +129,10 @@ def test_containment_dense_matches_sparse(spark, texts):
             for r in D.containment_pairs(df, n=2, threshold=0.8, **kw).collect()
         }
 
-    assert pairs() == pairs(dense_vocab_limit=0), texts
+    runs = on_each_tier(spark, lambda: (pairs(), pairs(dense_vocab_limit=0)))
+    for tier, (dense, sparse) in runs.items():
+        assert dense == sparse, (tier, texts)
+    assert runs["driver"] == runs["distributed"], texts
 
 
 def test_jaccard_dense_rounds_dyadic_ties_like_spark(spark):
@@ -170,11 +177,14 @@ def _lev(a, b):
 def test_deletion_blocking_matches_brute_force_levenshtein(spark, names):
     from lichess_event_stream_watcher_spark.operators.fuzzy import edit_distance_pairs
 
-    df = spark.createDataFrame([(n,) for n in names], "username string")
-    got = {
-        (r.name_a, r.name_b, r.dist)
-        for r in edit_distance_pairs(df, "username").collect()
-    }
+    df = driver_tier_df(spark, [(n,) for n in names], "username string")
+    runs = on_each_tier(
+        spark,
+        lambda: {
+            (r.name_a, r.name_b, r.dist)
+            for r in edit_distance_pairs(df, "username").collect()
+        },
+    )
     uniq = sorted(set(names))
     want = {
         (a, b, 1)
@@ -182,7 +192,8 @@ def test_deletion_blocking_matches_brute_force_levenshtein(spark, names):
         for b in uniq[i + 1 :]
         if _lev(a, b) == 1
     }
-    assert got == want, names
+    for tier, got in runs.items():
+        assert got == want, (tier, names)
 
 
 def test_quantize_int8_roundtrip_bound_property(spark):
@@ -250,33 +261,36 @@ def test_threshold_fanout_matches_per_threshold_brute_force(spark, texts):
     docs, exact dups, boundary-similarity pairs)."""
     from pyspark.sql import functions as F
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
-    )
+    df = driver_tier_df(spark, list(enumerate(texts)), "doc_id bigint, text string")
     thresholds = (100, 300, 500, 900)
-    pairs = D.jaccard_pairs(df, n=2, threshold=0.1)
-    th = F.array(*[F.lit(t) for t in thresholds])
-    surviving = F.filter(
-        th, lambda t: F.col("jaccard") >= t.cast("double") / F.lit(1000.0)
-    )
-    rows = pairs.select(
-        F.explode(surviving).alias("t"), "id_a", "id_b"
-    ).select("t", F.explode(F.array("id_a", "id_b")).alias("id"))
-    got = {
-        r.t: (r.np, r.nd)
-        for r in rows.groupBy("t")
-        .agg(
-            F.floor(F.count("*") / 2).cast("bigint").alias("np"),
-            F.countDistinct("id").cast("bigint").alias("nd"),
+
+    def fanout():
+        pairs = D.jaccard_pairs(df, n=2, threshold=0.1)
+        th = F.array(*[F.lit(t) for t in thresholds])
+        surviving = F.filter(
+            th, lambda t: F.col("jaccard") >= t.cast("double") / F.lit(1000.0)
         )
-        .collect()
-    }
+        rows = pairs.select(
+            F.explode(surviving).alias("t"), "id_a", "id_b"
+        ).select("t", F.explode(F.array("id_a", "id_b")).alias("id"))
+        return {
+            r.t: (r.np, r.nd)
+            for r in rows.groupBy("t")
+            .agg(
+                F.floor(F.count("*") / 2).cast("bigint").alias("np"),
+                F.countDistinct("id").cast("bigint").alias("nd"),
+            )
+            .collect()
+        }
+
+    runs = on_each_tier(spark, fanout)
     base = _brute_force(texts, threshold=0.1)
     for t in thresholds:
         keep = [(a, b) for a, b, j in base if j >= t / 1000.0]
         docs = {x for p in keep for x in p}
         want = (len(keep), len(docs))
-        assert got.get(t, (0, 0)) == want, (t, texts)
+        for tier, got in runs.items():
+            assert got.get(t, (0, 0)) == want, (tier, t, texts)
 
 
 @settings(
@@ -321,14 +335,17 @@ def test_band_sweep_matches_hashlib_brute_force(spark, texts):
             for y in mem
             if x < y
         }
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string"
-    )
-    got = {}
-    for row in D.lsh_band_sweep(df, band_counts=(2, 4, 8), k=16, n=2).collect():
-        got.setdefault(row.n_bands, set()).add((row.id_a, row.id_b))
-    for b in (2, 4, 8):
-        assert got.get(b, set()) == want[b], (b, texts)
+    df = driver_tier_df(spark, list(enumerate(texts)), "doc_id bigint, text string")
+
+    def sweep():
+        got = {}
+        for row in D.lsh_band_sweep(df, band_counts=(2, 4, 8), k=16, n=2).collect():
+            got.setdefault(row.n_bands, set()).add((row.id_a, row.id_b))
+        return got
+
+    for tier, got in on_each_tier(spark, sweep).items():
+        for b in (2, 4, 8):
+            assert got.get(b, set()) == want[b], (tier, b, texts)
 
 
 def test_dense_distributed_frontend_matches_pdf_tier(spark, sf_dir):

@@ -102,6 +102,74 @@ def test_stream_engine_end_to_end_with_restart(spark, tmp_path, landing):
     assert len(engine.messages.channel("notify")) == 2
 
 
+@pytest.mark.parametrize("room", [None, 3])
+def test_stream_batch_larger_than_checked_cap(spark, tmp_path, landing, monkeypatch, room):
+    """A file-source micro-batch of more rows than ``checked_cap``: every
+    match posts once in arrival order and the seen window keeps the newest
+    rows. With room for 3 matches the batch's 5 outrun the top-k and it
+    takes the second pass."""
+    from lichess_event_stream_watcher_spark.control import engine as engine_mod
+
+    if room is not None:
+        monkeypatch.setattr(engine_mod, "MATCH_ROOM", room)
+    engine = mk_engine(tmp_path)
+    engine.checked_cap = 3
+    users = [f"U{i}" for i in range(12)]
+    spam = {"U1", "U3", "U5", "U7", "U9"}
+    (landing / "b1.ndjson").write_text(
+        "\n".join(wire(u, email="spam@x" if u in spam else "a@b.c") for u in users)
+    )
+    collects = []
+    frame_cls = type(spark.range(0))
+    to_pandas = frame_cls.toPandas
+    monkeypatch.setattr(frame_cls, "toPandas", lambda self: collects.append(1) or to_pandas(self))
+    q = run_engine_stream(
+        engine, read_ndjson_stream(spark, str(landing)), str(tmp_path / "ckpt"), available_now=True
+    )
+    q.awaitTermination(120)
+    assert len(collects) == (1 if room is None else 2)
+    assert engine.messages.channel("notify") == [
+        f"Rule spam match: [{u}](https://lichess.org/@/{u.lower()}?mod)"
+        for u in users
+        if u in spam
+    ]
+    assert engine.store.find_rule("spam").match_count == 5
+    assert list(engine.recently_checked) == ["u9", "u10", "u11"]
+
+
+def test_first_batch_compiles_nothing(spark, tmp_path, landing, monkeypatch):
+    """``run_engine_stream`` builds the active rule set's scan column
+    before the query starts, so micro-batch 0 compiles no rule."""
+    from lichess_event_stream_watcher_spark.control import engine as engine_mod
+
+    engine = mk_engine(tmp_path)
+    calls = []
+    in_batch = []
+    compile_ = engine_mod.matches_column
+    monkeypatch.setattr(
+        engine_mod,
+        "matches_column",
+        lambda *a, **kw: (calls.append(bool(in_batch)), compile_(*a, **kw))[1],
+    )
+    process = engine.process_batch
+
+    def tracked(df, hypothetical=False):
+        in_batch.append(1)
+        try:
+            return process(df, hypothetical)
+        finally:
+            in_batch.pop()
+
+    engine.process_batch = tracked
+    (landing / "b1.ndjson").write_text("\n".join([wire("U1", email="spam@x"), wire("U2")]))
+    q = run_engine_stream(
+        engine, read_ndjson_stream(spark, str(landing)), str(tmp_path / "ckpt"), available_now=True
+    )
+    q.awaitTermination(120)
+    assert engine.store.find_rule("spam").match_count == 1
+    assert calls == [False]
+
+
 def test_ndjson_tail_data_source(spark, tmp_path):
     """The Spark 4 Python streaming source: byte-offset tailing emits only
     complete lines, holds back a partial tail, replays committed ranges

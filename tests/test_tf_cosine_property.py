@@ -7,6 +7,8 @@ L2 suffix-norm prefix lemma end to end.
 
 Hypothesis drives the corpus; Spark jobs per example are bounded by
 deduplicate + small sizes (each example runs 3 strategies over <=10 docs).
+Each example runs on a pandas-built frame twice: once through the driver
+tier, once forced to the distributed shapes.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ from collections import Counter
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from conftest import driver_tier_df, on_each_tier
 
 from lichess_event_stream_watcher_spark.operators.text import tf_cosine_pairs
 
@@ -56,19 +59,22 @@ def _brute_force(texts, threshold):
 )
 @given(texts=_CORPUS, threshold=st.sampled_from([0.3, 0.6, 0.85]))
 def test_tf_cosine_strategy_matches_brute_force(spark, strategy, texts, threshold):
-    df = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
+    df = driver_tier_df(spark, list(enumerate(texts)), "doc_id long, text string")
     kwargs = {
         "dense": {},  # tiny vocab always passes the dense gate
         "postings": {"dense_vocab_limit": 0, "sparse_strategy": "postings"},
         "prefix": {"dense_vocab_limit": 0, "sparse_strategy": "prefix"},
     }[strategy]
-    got = {
-        (r.id_a, r.id_b, r.cos_sim)
-        for r in tf_cosine_pairs(df, threshold=threshold, **kwargs).collect()
-    }
-    assert got == _brute_force(texts, threshold)
+    runs = on_each_tier(
+        spark,
+        lambda: {
+            (r.id_a, r.id_b, r.cos_sim)
+            for r in tf_cosine_pairs(df, threshold=threshold, **kwargs).collect()
+        },
+    )
+    want = _brute_force(texts, threshold)
+    for tier, got in runs.items():
+        assert got == want, (tier, strategy, texts)
 
 
 def test_lang_id_packed_form_matches_naive_argmax(spark):
